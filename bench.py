@@ -88,7 +88,9 @@ def scoring_workload(spark, sf_dir: str):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from dedupe_spark.session import default_cpus
+
+    cpus = default_cpus()
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = build_spark(cpus)
 

@@ -163,11 +163,13 @@ class Deduper:
             out = cands.orderBy(F.xxhash64("id1", "id2")).limit(k)
         else:
             out = _uncertain_top(self._score(cands), k)
-        # materialize the (driver-small) selection once: the budget count
-        # below and the caller's collect must not score the pool twice
-        out = out.localCheckpoint(eager=True)
-        self._pairs_served += out.count()
-        return out
+        # bring the ≤k selected rows to the driver once and hand them back
+        # as a local relation (an Arrow-built frame from pandas): the budget
+        # count and the caller's collect then run no Spark job, and the
+        # session leaves nothing behind in executor storage
+        picked = out.toPandas()
+        self._pairs_served += len(picked)
+        return cands.sparkSession.createDataFrame(picked, out.schema)
 
     # -- M4: label ingestion ----------------------------------------------
 

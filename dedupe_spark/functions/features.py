@@ -1,10 +1,11 @@
 """Pairwise feature extraction — LIGHT module (numpy/pandas only).
 
 This is deliberately separate from operators/scoring.py: the scoring pandas
-UDF's closure is unpickled inside every fresh Python worker, importing this
-module's dependency graph. Keeping pyspark out of that graph cuts worker
-cold-start from ~2s (pyspark.sql transitive imports) to ~0.4s (pandas),
-which is the difference between scaling and anti-scaling on short stages.
+UDF's closure is unpickled in each task, and a Python worker's first task
+imports this module's dependency graph. Workers are reused across tasks,
+but every new worker still pays that import once, on the critical path of
+the first wave of a stage. Keeping pyspark out of that graph cuts worker
+cold-start from ~2s (pyspark.sql transitive imports) to ~0.4s (pandas).
 
 Semantics: SURVEY.md §2.6 M1 — field types mirror dedupe variables
 (dedupe_script.py:266-286): String -> Jaro-Winkler + normalized

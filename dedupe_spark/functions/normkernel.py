@@ -11,6 +11,7 @@ from __future__ import annotations
 import re
 import unicodedata
 
+import numpy as np
 import pandas as pd
 
 MISSING = "N/A"
@@ -247,6 +248,23 @@ def preprocess_value(v: object) -> str:
     return s if s else MISSING
 
 
+_NUL_CHUNK = 1024
+
+
+def _has_nul(vals: np.ndarray) -> bool:
+    """Whether any string in ``vals`` contains NUL. Joins chunks of the
+    non-empty cells and searches each join once, so the scan runs in C and
+    the temporary string stays bounded; a non-string cell (NaN, numbers)
+    falls back to the per-row scan."""
+    try:
+        return any(
+            "\x00" in "".join(filter(None, vals[i : i + _NUL_CHUNK]))
+            for i in range(0, len(vals), _NUL_CHUNK)
+        )
+    except TypeError:
+        return any(isinstance(v, str) and "\x00" in v for v in vals)
+
+
 def preprocess_series(col: pd.Series) -> pd.Series:
     """Whole-batch normalizer == ``preprocess_value`` per element.
 
@@ -260,7 +278,7 @@ def preprocess_series(col: pd.Series) -> pd.Series:
     # 'a', diverging from the scalar path (found by the hypothesis parity
     # property). NUL-carrying batches are vanishingly rare in real text:
     # route them through the exact scalar map instead of the unique-cache.
-    if any(isinstance(v, str) and "\x00" in v for v in col):
+    if _has_nul(col.to_numpy(dtype=object)):
         return col.map(preprocess_value)
     # factorize sends null/NaN to code -1 (handled at the end); uniques are
     # therefore non-null

@@ -953,8 +953,8 @@ def _sigs_from_lists(
         # ~80x slower on this shape), and a per-perm T-sized buffer, NOT a
         # (num_perm, T) matrix — this sandbox faults fresh large allocations
         # in at ~25 MB/s, so a worker's first call paid ~3s just mapping the
-        # big intermediate (with spark.python.worker.reuse=false, EVERY task
-        # is a first call); the small reused buffer is warm after perm 0.
+        # big intermediate (and every new worker makes a first call); the
+        # small reused buffer is warm after perm 0.
         table = (
             (a[:, None] * uh[None, :] + b[:, None]) % np.uint64(_MERSENNE)
         ).astype(np.uint32)

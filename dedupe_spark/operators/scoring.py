@@ -118,9 +118,9 @@ class RecordLookup:
             # dense ascending int range (the engine's row-index record_id,
             # sources/ingest.py P8): positions are id - base, computed
             # arithmetically in the workers. The broadcast drops the id
-            # index entirely — 16 B/record smaller, and no per-task pandas
-            # hashtable rebuild (worker.reuse=false makes every task a cold
-            # process, so a shipped Index would re-hash n_records per task).
+            # index entirely — 16 B/record smaller, and no pandas hashtable
+            # rebuild (a shipped Index re-hashes n_records in every worker
+            # that unpickles the broadcast).
             value["base"] = int(ids_np[0])
             value["n"] = len(ids_np)
         else:

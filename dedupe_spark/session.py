@@ -21,6 +21,14 @@ from pyspark.sql import SparkSession
 ARROW_BATCH = 30_000
 
 
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the number of cores this process may run
+    on. Python workers stay resident, at least one per concurrent task, so
+    the width should not exceed the machine."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "dedupe_spark",
     master: str | None = None,
@@ -29,10 +37,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) in the
-    sandbox; on a real cluster pass ``None`` and let spark-submit decide.
+    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the cores
+    this process may run on); on a real cluster pass ``None`` and let
+    spark-submit decide.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     if master is None:
         master = f"local[{cpus}]"
     # Parse parallelism out of local[N] for shuffle sizing; on a cluster you
@@ -60,15 +69,12 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH)
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # fresh Python worker per task: reused workers accumulate allocator
-        # state across Arrow-UDF stages and measurably degrade (2-4x) over a
-        # long session; startup (~100ms) amortizes over our batch sizes.
-        # SPARK_GRAFT_WORKER_REUSE=true overrides for single-pipeline runs
-        # (bench A/B, scaling children) where aging can't accumulate
-        .config(
-            "spark.python.worker.reuse",
-            os.environ.get("SPARK_GRAFT_WORKER_REUSE", "false"),
-        )
+        # warm Python workers: a fresh worker per task would pay its imports
+        # and the closure/broadcast unpickle on every task, most of the
+        # Python time of a short UDF stage. Worker memory and round time
+        # stay flat over a long session (test_api.py::
+        # test_long_labeling_session_keeps_workers_warm)
+        .config("spark.python.worker.reuse", "true")
         # local[N] runs all executor threads inside the driver JVM — size the
         # heap for N concurrent tasks' shuffle + cache blocks or GC dominates
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))

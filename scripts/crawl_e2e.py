@@ -41,10 +41,10 @@ def main() -> None:
         pages_df,
         pairwise_f1,
     )
-    from dedupe_spark.session import get_spark
+    from dedupe_spark.session import default_cpus, get_spark
     from dedupe_spark.sources.warc import read_warc, warc_pages, write_warc
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     spark = get_spark(
         "crawl_e2e", master=f"local[{cpus}]", shuffle_partitions=cpus
     )

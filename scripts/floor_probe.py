@@ -44,7 +44,6 @@ def main() -> None:
         f"floor_probe_{cpus}",
         master=f"local[{cpus}]",
         shuffle_partitions=cpus,
-        extra_conf={"spark.python.worker.reuse": "true"},
     )
     records = _doc_records(spark, sf_dir).cache()
     records.count()

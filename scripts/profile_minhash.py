@@ -17,10 +17,10 @@ def main() -> None:
 
     from dedupe_spark.operators import blocking as B
     from dedupe_spark.operators import dedup as D
-    from dedupe_spark.session import get_spark
+    from dedupe_spark.session import default_cpus, get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     spark = get_spark("profile_minhash", master=f"local[{cpus}]",
                       shuffle_partitions=cpus)
     par = spark.sparkContext.defaultParallelism

@@ -34,15 +34,11 @@ def child(cpus: int, lockstep: bool = False) -> None:
     from dedupe_spark.queries import DOC_FIELDS, FLAGSHIP_MODEL, _doc_records
     from dedupe_spark.session import get_spark
 
-    # reuse=true here: each child is a single-job fresh JVM (no cross-query
-    # aging), and warm workers make the measurement reflect steady-state
-    # throughput — on a real cluster workers stay warm for hours
     spark = get_spark(
         f"scaling_{cpus}",
         master=f"local[{cpus}]",
         shuffle_partitions=cpus,
         extra_conf={
-            "spark.python.worker.reuse": "true",
             # one Arrow batch per task on this workload (8M pairs / 3
             # tasks per core): per-batch kernel setup (factorize, unique
             # encode, get_indexer, Series construction) amortizes once —

@@ -41,7 +41,7 @@ def child(conf: dict) -> None:
         "w32_ab",
         master="local[32]",
         shuffle_partitions=32,
-        extra_conf={"spark.python.worker.reuse": "true", **conf},
+        extra_conf=conf,
     )
     records = _doc_records(spark, "/root/testdata/sf0.1").cache()
     records.count()

@@ -3,8 +3,15 @@ on the KNA-style customer-master fixture — the reference's own domain."""
 
 from __future__ import annotations
 
+import os
+import statistics
+import time
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import StringType
 
 from dedupe_spark.api import Deduper, dedupe_table
 from dedupe_spark.fixtures import make_kna_customers
@@ -157,3 +164,96 @@ def test_deduper_guards(spark, kna):
         d.train()  # no labels
     with pytest.raises(RuntimeError):
         d.partition(df)  # not trained
+
+
+def _mark_by_truth(d, truth, pairs):
+    d.mark_pairs(
+        match=[p for p in pairs if truth[p[0]] == truth[p[1]]],
+        distinct=[p for p in pairs if truth[p[0]] != truth[p[1]]],
+    )
+
+
+def test_uncertain_pairs_served_sequence(spark, kna):
+    """A seeded labeling session, labels from the fixture's ground truth:
+    the pairs served in two rounds before any model and three after a
+    retrain each are pinned, as are the columns of each returned frame.
+    The frame is local: collecting it runs no Spark job."""
+    df, truth = kna
+    d = Deduper(
+        [FieldSpec("Name 1"), FieldSpec("City"), FieldSpec("Street")],
+        id_col="record_id",
+        seed=3,
+    )
+    d.prepare_training(df)
+    d.mark_pairs(match=sorted(_true_pairs(truth))[:3])
+    sc = spark.sparkContext
+    served, columns, jobs = [], [], []
+    for i in range(5):
+        if i >= 2:
+            d.train()
+        out = d.uncertain_pairs(k=2)
+        sc.setJobGroup(f"serve-{i}", "collect the served pairs")
+        try:
+            pairs = [(r["id1"], r["id2"]) for r in out.collect()]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"serve-{i}")))
+        served.append(pairs)
+        columns.append(out.columns)
+        _mark_by_truth(d, truth, pairs)
+    d.close()
+    assert served == [
+        [("10046", "10066"), ("10041", "10098")],
+        [("10021", "90092"), ("10061", "10106")],
+        [("10072", "90049"), ("90049", "90072")],
+        [("10006", "10025"), ("10029", "10089")],
+        [("10017", "10035"), ("10105", "10117")],
+    ]
+    assert columns == [["id1", "id2"]] * 2 + [["id1", "id2", "score"]] * 3
+    assert jobs == [0] * 5
+
+
+@pandas_udf(StringType())
+def _worker_stat(x: pd.Series) -> pd.Series:
+    """'<pid> <VmRSS kB>' of the Python worker that runs the batch."""
+    with open("/proc/self/status") as fh:
+        rss_kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("VmRSS:"))
+    return pd.Series([f"{os.getpid()} {rss_kb}"] * len(x))
+
+
+def test_long_labeling_session_keeps_workers_warm(spark, kna):
+    """32 labeling rounds in the shared session, with a retrain every 8:
+    the Python workers are reused (their PIDs repeat across rounds) and do
+    not age. Summed worker RSS in the last 5 rounds stays within 1.5x of
+    rounds 2-6, and the median round time of the last 10 rounds within 2x
+    of rounds 2-11."""
+    assert spark.conf.get("spark.python.worker.reuse") == "true"
+    df, truth = kna
+    d = Deduper(
+        [FieldSpec("Name 1"), FieldSpec("City"), FieldSpec("Street")],
+        id_col="record_id",
+    )
+    d.prepare_training(df)
+    pos = sorted(_true_pairs(truth))
+    d.mark_pairs(match=pos[:3], distinct=[(pos[0][0], pos[1][0])])
+    # more one-row tasks than resident workers: each probe walks the whole
+    # idle-worker queue
+    probe = spark.range(0, 8, 1, 8).select(_worker_stat("id").alias("s"))
+    rounds, secs = 32, []
+    early, late = {}, {}  # pid -> latest VmRSS kB, in rounds 2-6 / last 5
+    for i in range(rounds):
+        if i % 8 == 0:
+            d.train()
+        t0 = time.perf_counter()
+        pairs = [(r["id1"], r["id2"]) for r in d.uncertain_pairs(k=1).collect()]
+        secs.append(time.perf_counter() - t0)
+        assert len(pairs) == 1
+        _mark_by_truth(d, truth, pairs)
+        if 1 <= i <= 5 or i >= rounds - 5:
+            stats = dict(map(int, r["s"].split()) for r in probe.collect())
+            (early if i <= 5 else late).update(stats)
+    d.close()
+
+    assert early.keys() & late.keys(), "no worker survived the session"
+    assert sum(late.values()) <= 1.5 * sum(early.values()), (early, late)
+    assert statistics.median(secs[-10:]) <= 2 * statistics.median(secs[1:11]), secs

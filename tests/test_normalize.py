@@ -231,3 +231,27 @@ def test_fold_ascii_identity_tokens_are_injective():
     b = preprocess_value("Xא" + "1")
     assert a != b, (a, b)
     assert preprocess_value("\U00020000") == "u020000"  # plane-2 fits 6 hex
+
+
+def test_preprocess_series_nul_batch_takes_scalar_path(monkeypatch):
+    """pandas' all-string factorize compares C strings, so 'a\\x00b' would
+    merge with 'a' in the unique-cache. A batch carrying NUL anywhere (past
+    the first chunk of the check, next to nulls) goes through the exact
+    scalar map, once per row; a NUL-free batch never does."""
+    from dedupe_spark.functions import normkernel as NK
+
+    calls = []
+
+    def spy(v):
+        calls.append(v)
+        return preprocess_value(v)
+
+    monkeypatch.setattr(NK, "preprocess_value", spy)
+    vals = ["a"] * 1500 + [None, "a\x00b", "A"]
+    got = list(NK.preprocess_series(pd.Series(vals, dtype=object)))
+    assert len(calls) == len(vals)
+    assert got[-3:] == [MISSING, "a\x00b", "a"]
+    assert got == [preprocess_value(v) for v in vals]
+    calls.clear()
+    NK.preprocess_series(pd.Series(["a", None, "b"], dtype=object))
+    assert calls == []
