@@ -19,12 +19,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .functions.features import FieldSpec, compute_features, feature_names
+from .lifecycle import track
 from .model import LogisticModel, fit_logistic
 from .normalize import normalize_features
 from .operators import blocking as B
 from .operators.assemble import assemble_clusters
 from .operators.clustering import connected_components, member_confidence
-from .operators.scoring import attach_pair_fields, score_pairs
+from .operators.scoring import attach_pair_fields, score_pairs, try_build_lookup
 from .training import (
     sample_training_pairs,
     select_predicates,
@@ -250,7 +251,10 @@ class Deduper:
         blocks = B.generate_blocks(recs, self.id_col, self.predicates)
         cands = B.candidate_pairs(blocks, max_block, salt_target)
         scored = score_pairs(
-            cands, recs, self.model, self.fields, self.id_col, self.norm_suffix
+            cands, recs, self.model, self.fields, self.id_col, self.norm_suffix,
+            lookup=track(
+                try_build_lookup(recs, self.id_col, self.fields, self.norm_suffix)
+            ),
         )
         edges = scored.where(F.col("score") >= F.lit(threshold))
         assign = member_confidence(connected_components(edges), edges)
@@ -261,13 +265,10 @@ class Deduper:
         # the record table is fixed after prepare_training: build the
         # broadcast lookup once and reuse it across every scoring call
         # (uncertain_pairs loops would otherwise re-collect the table and
-        # pile up never-destroyed broadcasts each iteration). Cap-gated
-        # exactly like score_pairs strategy='auto': a corpus over the
-        # row/byte caps — or one with non-unique ids — scores through the
-        # join strategy instead of toPandas-collecting into the driver.
-        if self._lookup is None and not self._lookup_tried:
-            from .operators.scoring import try_build_lookup
-
+        # pile up never-destroyed broadcasts each iteration). A corpus over
+        # the caps — or one with non-unique ids — gets None and scores
+        # through the pair join; the table is fixed, so that answer stays.
+        if not self._lookup_tried:
             self._lookup = try_build_lookup(
                 self._records, self.id_col, self.fields, self.norm_suffix
             )
@@ -279,9 +280,6 @@ class Deduper:
             self.fields,
             self.id_col,
             self.norm_suffix,
-            # the record table is fixed: a failed cap check stays failed, so
-            # skip re-running the sizing aggregate on every call
-            strategy="join" if self._lookup is None else "broadcast",
             lookup=self._lookup,
         )
 

@@ -1013,7 +1013,7 @@ def capped_bag_overlap_batch(
     s1: "pd.Series", s2: "pd.Series", cap: int = 3
 ) -> tuple[np.ndarray, np.ndarray]:
     """Exact capped-bag (intersection, union) per pair, int64 — the
-    verify kernel behind the weighted-MinHash broadcast strategy. Bags
+    verify kernel behind the weighted-MinHash gather verify. Bags
     are built once per DISTINCT text (factorize: candidate pairs repeat
     records ~block-size times); the per-pair loop is dict gets over the
     smaller bag. inter = Σ min(ĉ1, ĉ2); union = |A| + |B| − inter by

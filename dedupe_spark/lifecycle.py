@@ -2,7 +2,7 @@
 
 Several operators cache UDF-computed intermediates (minhash/simhash block
 tables, normalized record tables) or create Spark broadcasts (record
-lookups for the broadcast-gather scoring strategy). Each is correct and
+lookups for the gather path of the pair kernels). Each is correct and
 cheap in isolation, but a long-lived session running the whole registered
 query suite accumulates every one of them in executor storage memory —
 none of the builders can safely unpersist what the caller has not yet
@@ -27,7 +27,6 @@ a localCheckpoint RDD cannot be recomputed once its blocks are dropped.
 
 from __future__ import annotations
 
-import contextlib
 import threading
 from typing import Any
 
@@ -35,55 +34,30 @@ from pyspark.sql import DataFrame, SparkSession
 
 _LOCK = threading.Lock()
 _TRACKED: list[Any] = []
-# stack of active scope() frames (thread-shared by design: a scope
-# protects its objects from ANY interleaved release_tracked call)
-_SCOPES: list[list[Any]] = []
 
 
 def track(obj: Any) -> Any:
     """Register a call-local cached DataFrame / Broadcast / RecordLookup
-    for release at the next :func:`release_session_storage` — or, inside a
-    :func:`scope` block, at scope exit. Returns the object so call sites
-    stay one-liners (``track(df.cache())``)."""
-    with _LOCK:
-        (_SCOPES[-1] if _SCOPES else _TRACKED).append(obj)
-    return obj
-
-
-@contextlib.contextmanager
-def scope():
-    """Isolate lifecycle tracking for one builder.
-
-    Objects ``track()``-ed inside the block are released at block exit and
-    are invisible to the global :func:`release_tracked` /
-    :func:`release_session_storage` sweep — so a builder that must
-    interleave two lazy pipelines (build A, build B, collect A, collect B)
-    can wrap each build and no longer depends on the release-at-next-
-    query-entry convention destroying another builder's live broadcasts
-    (ADVICE r3: the global list's convention-only semantics).
-    Note ``release_session_storage`` still clears ALL persistent RDDs and
-    the SQL cache — scopes shield tracked objects, not localCheckpoints.
-    """
-    mine: list[Any] = []
-    with _LOCK:
-        _SCOPES.append(mine)
-    try:
-        yield mine
-    finally:
+    for release at the next :func:`release_session_storage`. Returns the
+    object so call sites stay one-liners (``track(df.cache())``); None
+    passes through untracked (``track(try_build_lookup(...))``)."""
+    if obj is not None:
         with _LOCK:
-            if mine in _SCOPES:
-                _SCOPES.remove(mine)
-        _release_list(mine)
+            _TRACKED.append(obj)
+    return obj
 
 
 def tracked_count() -> int:
     return len(_TRACKED)
 
 
-def _release_list(objs: list[Any]) -> int:
+def release_tracked() -> int:
+    """Unpersist/destroy every tracked object. Never raises (a released
+    SparkContext or an already-destroyed broadcast is not an error at
+    cleanup time)."""
     n = 0
-    while objs:
-        obj = objs.pop()
+    while _TRACKED:
+        obj = _TRACKED.pop()
         try:
             if isinstance(obj, DataFrame):
                 obj.unpersist()
@@ -93,14 +67,6 @@ def _release_list(objs: list[Any]) -> int:
         except Exception:
             pass
     return n
-
-
-def release_tracked() -> int:
-    """Unpersist/destroy every globally tracked object (active
-    :func:`scope` frames are untouched). Never raises (a released
-    SparkContext or an already-destroyed broadcast is not an error at
-    cleanup time)."""
-    return _release_list(_TRACKED)
 
 
 def release_session_storage(spark: SparkSession) -> dict:

@@ -89,7 +89,7 @@ def minhash_bands_udf(
     # otherwise duplicates the UDF into a `size(udf(x)) > 0` filter under
     # the explode — the whole MinHash kernel evaluated TWICE per document
     # (observed: two ArrowEvalPython nodes in the blocks plan). Same
-    # rationale as scoring.make_lookup_score_udf.
+    # rationale as scoring.gather_pairs.
     return _bands.asNondeterministic()
 
 

@@ -17,6 +17,14 @@ Scale notes: every operator here is one explode + one shuffle-join on the
 blocking key plus a verification map — no O(n^2) stage. Band keys are
 namespaced so a single blocks table can mix predicates. Mega-buckets are
 capped by the same block-size guard as learned blocking (blocking.py).
+
+Verification follows the pair-kernel contract of operators/scoring.py: a
+lookup argument (:func:`text_lookup`, :func:`weighted_verify_index`)
+gathers texts worker-side through ``scoring.gather_pairs``; None ships
+them through the pair join. Whether a lookup is built at all is decided
+by ``scoring.try_build_lookup`` against its two size caps, once, by the
+owner of the corpus (``ngram_jaccard_pairs``, ``minhash_dedup``, or the
+caller of ``minhash_lsh_pairs``/``weighted_minhash_pairs``).
 """
 
 from __future__ import annotations
@@ -31,11 +39,10 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
 from ..functions import strings as S
-from ..functions.features import lookup_positions
 from ..lifecycle import track
 from . import blocking as B
 from .clustering import connected_components
-from .scoring import FieldSpec, RecordLookup, try_build_lookup
+from .scoring import FieldSpec, RecordLookup, gather_pairs, try_build_lookup
 
 # ---------------------------------------------------------------------------
 # Exact deduplication (hash-groupBy)
@@ -95,7 +102,6 @@ def minhash_lsh_pairs(
     jaccard_threshold: float | None = 0.7,
     max_block: int = 2000,
     verify_lookup: RecordLookup | None = None,
-    verify_strategy: str = "auto",
 ) -> DataFrame:
     """Near-dup candidate pairs via MinHash-LSH, optionally verified.
 
@@ -107,10 +113,9 @@ def minhash_lsh_pairs(
     similarity of same-domain corpora (J≈0.4-0.5) out of the buckets — low
     r floods the candidate join with junk pairs at web scale.
 
-    ``verify_lookup``/``verify_strategy`` pass through to
-    :func:`ngram_jaccard_verify` — callers scoring repeatedly against the
-    same corpus build one :func:`text_lookup` and amortize the sizing scan
-    + collect + broadcast across calls.
+    ``verify_lookup`` passes through to :func:`ngram_jaccard_verify`:
+    a :func:`text_lookup` of ``df`` verifies by gather, None through the
+    pair join. Build it once per corpus and reuse it across calls.
     """
     mh = B.minhash_bands_udf(num_perm=num_perm, bands=bands, shingle_k=shingle_k)
     # cache: the candidate self-join reads the UDF-computed blocks twice
@@ -124,31 +129,19 @@ def minhash_lsh_pairs(
     if jaccard_threshold is None:
         return pairs
     verified = ngram_jaccard_verify(
-        pairs, df, id_col, text_col, n=shingle_k,
-        lookup=verify_lookup, strategy=verify_strategy,
+        pairs, df, id_col, text_col, n=shingle_k, lookup=verify_lookup
     )
     return verified.where(F.col("jaccard") >= F.lit(jaccard_threshold))
 
 
 def text_lookup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    broadcast_rows: int = 2_000_000,
-    broadcast_bytes: int = 256 * 1024 * 1024,
+    df: DataFrame, id_col: str, text_col: str = "text"
 ) -> RecordLookup | None:
-    """Prebuilt broadcast (id -> text) for :func:`ngram_jaccard_verify`'s
-    lookup strategy; None when the corpus exceeds the caps or ids repeat
-    (callers then use the join strategy). Build once per corpus and reuse —
-    the caller owns the lifecycle (``lookup.destroy()``)."""
-    return try_build_lookup(
-        df,
-        id_col,
-        [FieldSpec(text_col, "String")],
-        "",
-        broadcast_rows,
-        broadcast_bytes,
-    )
+    """Broadcast (id -> text) lookup for :func:`ngram_jaccard_verify`, or
+    None when the corpus exceeds the caps or ids repeat
+    (scoring.try_build_lookup). Build once per corpus and reuse — the
+    caller owns the lifecycle (``lookup.destroy()`` or ``track``)."""
+    return try_build_lookup(df, id_col, [FieldSpec(text_col, "String")])
 
 
 def ngram_jaccard_verify(
@@ -158,61 +151,19 @@ def ngram_jaccard_verify(
     text_col: str,
     n: int = 5,
     lookup: RecordLookup | None = None,
-    strategy: str = "auto",
-    broadcast_rows: int = 2_000_000,
-    broadcast_bytes: int = 256 * 1024 * 1024,
 ) -> DataFrame:
     """Attach exact character-n-gram Jaccard to candidate pairs (Arrow UDF).
 
-    Same two physical strategies (and the same ``strategy``/``lookup``
-    contract) as operators/scoring.score_pairs: with a broadcast lookup,
-    pairs carry only ids and workers gather texts worker-side — per-pair
-    traffic drops from two full documents to two ids. Larger corpora ship
-    texts through the pair joins (the at-scale path). ``strategy="auto"``
-    runs ONE eager sizing aggregate per call; pass a prebuilt ``lookup``
-    (:func:`text_lookup`) to amortize the sizing scan + collect + broadcast
-    across calls, or ``strategy="join"`` to stay fully lazy.
+    The scoring.score_pairs contract: a ``lookup`` (:func:`text_lookup`)
+    gathers texts worker-side, so pairs carry only ids; None ships texts
+    through the pair joins (the at-scale path). Stays lazy either way.
     """
-    import numpy as np
-
-    spark = pairs.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if strategy not in ("auto", "join", "broadcast"):
-        raise ValueError(f"unknown verify strategy {strategy!r}")
-    if strategy == "join":
-        lookup = None
-    elif lookup is None:
-        lk = text_lookup(df, id_col, text_col, broadcast_rows, broadcast_bytes)
-        if lk is None and strategy == "broadcast":
-            raise ValueError(
-                "broadcast verify requested but the text table exceeds the "
-                "broadcast caps or has duplicate ids"
-            )
-        lookup = track(lk) if lk is not None else None
     if lookup is not None:
-        bc = lookup.broadcast
-        slim = pairs.select("id1", "id2").repartition(par * 3)
+        return gather_pairs(
+            pairs, lookup, _jaccard_kernel(text_col, n), DoubleType(), "jaccard"
+        )
 
-        @pandas_udf(DoubleType())
-        def _jac_lookup(id1: pd.Series, id2: pd.Series) -> pd.Series:
-            lk = bc.value
-            texts = lk["cols"][text_col]
-            p1 = lookup_positions(lk, id1.to_numpy())
-            p2 = lookup_positions(lk, id2.to_numpy())
-            ok = (p1 >= 0) & (p2 >= 0)
-            t1 = pd.Series(texts[np.where(ok, p1, 0)])
-            t2 = pd.Series(texts[np.where(ok, p2, 0)])
-            out = S.ngram_jaccard_batch(t1, t2, n)
-            return pd.Series(np.where(ok, out, np.nan))
-
-        return slim.select(
-            "id1",
-            "id2",
-            # asNondeterministic: see scoring.make_lookup_score_udf —
-            # callers filter on jaccard; pushdown would run the kernel twice
-            _jac_lookup.asNondeterministic()("id1", "id2").alias("jaccard"),
-        ).where(F.col("jaccard").isNotNull() & ~F.isnan("jaccard"))
-
+    par = pairs.sparkSession.sparkContext.defaultParallelism
     proj = df.select(F.col(id_col).alias("_rid"), F.col(text_col).alias("_txt"))
     wide = (
         pairs.join(proj.withColumnRenamed("_rid", "id1"), "id1")
@@ -233,6 +184,16 @@ def ngram_jaccard_verify(
     return wide.select("id1", "id2", jac("_t1", "_t2").alias("jaccard"))
 
 
+def _jaccard_kernel(text_col: str, n: int):
+    def kernel(lk: dict, p1: np.ndarray, p2: np.ndarray) -> np.ndarray:
+        texts = lk["cols"][text_col]
+        return S.ngram_jaccard_batch(
+            pd.Series(texts[p1]), pd.Series(texts[p2]), n
+        )
+
+    return kernel
+
+
 def minhash_dedup(
     df: DataFrame,
     id_col: str,
@@ -241,7 +202,11 @@ def minhash_dedup(
     **kw,
 ) -> DataFrame:
     """Survivor set after transitive near-dup removal: connected components
-    over verified near-dup pairs, keep the min id per component."""
+    over verified near-dup pairs, keep the min id per component. Verifies
+    through a :func:`text_lookup` of ``df`` unless ``verify_lookup`` is
+    passed."""
+    if "verify_lookup" not in kw:
+        kw["verify_lookup"] = track(text_lookup(df, id_col, text_col))
     pairs = minhash_lsh_pairs(
         df, id_col, text_col, jaccard_threshold=jaccard_threshold, **kw
     )
@@ -286,8 +251,6 @@ def weighted_verify_index(
     text_col: str = "text",
     cap: int = 3,
     num_perm: int = 126,
-    broadcast_rows: int = 2_000_000,
-    broadcast_bytes: int = 256 * 1024 * 1024,
 ) -> RecordLookup | None:
     """Broadcast (id → text, weighted signature) index for the two-stage
     verify: the standard text lookup augmented with the corpus's
@@ -295,10 +258,8 @@ def weighted_verify_index(
     ONCE driver-side from the collected texts (the same caps and
     lifecycle contract as :func:`text_lookup`; ~num_perm·4 bytes/doc on
     top of the texts). None when the corpus exceeds the caps — callers
-    fall back to the relational strategy."""
-    import math
-
-    lk = text_lookup(df, id_col, text_col, broadcast_rows, broadcast_bytes)
+    then verify through the relational (join) path."""
+    lk = text_lookup(df, id_col, text_col)
     if lk is None:
         return None
     spark = df.sparkSession
@@ -328,7 +289,6 @@ def weighted_minhash_pairs(
     max_block: int = 2000,
     threshold: tuple[int, int] | None = (7, 10),
     verify_lookup: RecordLookup | None = None,
-    verify_strategy: str = "auto",
 ) -> DataFrame:
     """Near-dup pairs under the CAPPED BAG Jaccard
     ``Σ_t min(ĉ1, ĉ2) / Σ_t max(ĉ1, ĉ2)`` (ĉ = min(count, cap)) —
@@ -341,21 +301,20 @@ def weighted_minhash_pairs(
     ``t#1..t#c``, standard MinHash-LSH bands over the expanded multiset
     (strings.weighted_minhash_bands_batch), so band collision tracks
     the bag Jaccard. Candidates come from the same capped+salted bucket
-    join as the unweighted family; verification is EXACT under either
-    of the family's two physical strategies (the
-    :func:`ngram_jaccard_verify` contract): the relational path joins
-    pairs ⋈ token-count bag both sides — intersection
-    ``Σ min(c1, c2)`` per pair, union by the min/max identity
-    ``|A| + |B| − inter`` from a per-doc size relation, no UDF — and
-    the broadcast path (``verify_lookup``/``verify_strategy``) gathers
-    texts worker-side and computes the IDENTICAL integers in one Arrow
-    kernel, so pairs carry only ids and the O(candidates × tokens/doc)
-    token shuffle never happens (the 10× replica stress measured that
-    shuffle as 370 s of a 370 s runtime). The threshold compare is an
-    integer cross-multiply (``den·inter ≥ num·union``), exact in every
-    engine and identical across strategies; the reported jaccard is one
-    IEEE division rounded to 6 dp. ``threshold=None`` returns all
-    scored candidates."""
+    join as the unweighted family; verification is EXACT on either of
+    the family's two paths (the scoring.score_pairs lookup contract):
+    with ``verify_lookup=None`` the relational path joins pairs ⋈
+    token-count bag both sides — intersection ``Σ min(c1, c2)`` per
+    pair, union by the min/max identity ``|A| + |B| − inter`` from a
+    per-doc size relation, no UDF — and with a
+    :func:`weighted_verify_index` the gather path computes the IDENTICAL
+    integers in one Arrow kernel, so pairs carry only ids and the
+    O(candidates × tokens/doc) token shuffle never happens (the 10×
+    replica stress measured that shuffle as 370 s of a 370 s runtime).
+    The threshold compare is an integer cross-multiply
+    (``den·inter ≥ num·union``), exact in every engine and identical on
+    both paths; the reported jaccard is one IEEE division rounded to
+    6 dp. ``threshold=None`` returns all scored candidates."""
     rows = num_perm // bands
     a, b = S.minhash_params(num_perm)
 
@@ -372,9 +331,7 @@ def weighted_minhash_pairs(
     )
     pairs = B.candidate_pairs(blocks, max_block=max_block)
 
-    if verify_strategy not in ("auto", "join", "broadcast"):
-        raise ValueError(f"unknown verify strategy {verify_strategy!r}")
-    # two-stage decision (STRATEGY-INDEPENDENT): a candidate reaches the
+    # two-stage decision (PATH-INDEPENDENT): a candidate reaches the
     # exact bag verify only if ≥ ceil(0.7·num_perm) signature positions
     # agree — an unbiased, vectorizable bag-Jaccard estimate. At the 0.8
     # operating threshold the false-reject rate is Chernoff-small
@@ -384,75 +341,40 @@ def weighted_minhash_pairs(
     # before any per-pair dict work. The SQL twin re-derives the same
     # integer match counts from its mh_sig relation.
     min_matches = -(-num_perm * 7 // 10)  # ceil(0.7 · num_perm)
-    lookup = verify_lookup
-    if verify_strategy == "join":
-        lookup = None
-    elif lookup is None:
-        lk = weighted_verify_index(df, id_col, text_col, cap, num_perm)
-        if lk is None and verify_strategy == "broadcast":
-            raise ValueError(
-                "broadcast verify requested but the text table exceeds "
-                "the broadcast caps or has duplicate ids"
-            )
-        lookup = track(lk) if lk is not None else None
-
-    if lookup is not None:
-        if "wsigs" not in lookup.broadcast.value:
+    if verify_lookup is not None:
+        if "wsigs" not in verify_lookup.broadcast.value:
             raise ValueError(
                 "verify_lookup must come from weighted_verify_index "
                 "(plain text_lookup carries no signature matrix)"
             )
-        spark = pairs.sparkSession
-        par = spark.sparkContext.defaultParallelism
-        bc = lookup.broadcast
-        slim = pairs.select("id1", "id2").repartition(par * 3)
 
-        @pandas_udf(ArrayType(LongType()))
-        def _bag_iu(id1: pd.Series, id2: pd.Series) -> pd.Series:
-            lk = bc.value
+        def _bag_iu(lk: dict, p1: np.ndarray, p2: np.ndarray) -> list:
             texts = lk["cols"][text_col]
             sigs = lk["wsigs"]
-            p1 = lookup_positions(lk, id1.to_numpy())
-            p2 = lookup_positions(lk, id2.to_numpy())
-            ok = (p1 >= 0) & (p2 >= 0)
-            m = np.zeros(len(p1), dtype=np.int64)
-            if ok.any():
-                m[ok] = (
-                    sigs[p1[ok]] == sigs[p2[ok]]
-                ).sum(axis=1)
-            passed = ok & (m >= min_matches)
-            inter = np.zeros(len(p1), dtype=np.int64)
-            union = np.ones(len(p1), dtype=np.int64)
-            if passed.any():
-                t1 = pd.Series(texts[p1[passed]])
-                t2 = pd.Series(texts[p2[passed]])
-                pi, pu = S.capped_bag_overlap_batch(t1, t2, cap)
-                inter[passed] = pi
-                union[passed] = pu
-            return pd.Series(
-                [
-                    [int(i), int(u)] if (o and p) else None
-                    for i, u, o, p in zip(inter, union, ok, passed)
-                ]
-            )
+            m = (sigs[p1] == sigs[p2]).sum(axis=1)
+            passed = np.flatnonzero(m >= min_matches)
+            out = [None] * len(p1)
+            if len(passed):
+                inter, union = S.capped_bag_overlap_batch(
+                    pd.Series(texts[p1[passed]]),
+                    pd.Series(texts[p2[passed]]),
+                    cap,
+                )
+                for k, i, u in zip(passed, inter, union):
+                    out[k] = [int(i), int(u)]
+            return out
 
-        scored = (
-            slim.select(
-                "id1",
-                "id2",
-                _bag_iu.asNondeterministic()("id1", "id2").alias("_iu"),
-            )
-            .where(F.col("_iu").isNotNull())
-            .select(
-                "id1",
-                "id2",
-                F.element_at("_iu", 1).alias("inter"),
-                F.element_at("_iu", 2).alias("union"),
-            )
+        scored = gather_pairs(
+            pairs, verify_lookup, _bag_iu, ArrayType(LongType()), "_iu"
+        ).select(
+            "id1",
+            "id2",
+            F.element_at("_iu", 1).alias("inter"),
+            F.element_at("_iu", 2).alias("union"),
         )
     else:
         # relational prefilter: the same ≥ min_matches rule over the
-        # signature relation (doc_id, i, v), so both strategies decide
+        # signature relation (doc_id, i, v), so both paths decide
         # identically
         a_p, b_p = a, b
 
@@ -664,9 +586,10 @@ def ngram_jaccard_pairs(
     }
     blocks = B.generate_blocks(df, id_col, preds)
     pairs = B.candidate_pairs(blocks, max_block=max_block)
-    return ngram_jaccard_verify(pairs, df, id_col, text_col, n=n).where(
-        F.col("jaccard") >= F.lit(threshold)
-    )
+    return ngram_jaccard_verify(
+        pairs, df, id_col, text_col, n=n,
+        lookup=track(text_lookup(df, id_col, text_col)),
+    ).where(F.col("jaccard") >= F.lit(threshold))
 
 
 # ---------------------------------------------------------------------------

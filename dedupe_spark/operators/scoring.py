@@ -2,26 +2,31 @@
 
 The reference scores candidate pairs with dedupe 3.0.3's C comparators and a
 regularized logistic regression, fanned out with multiprocessing (call site
-/root/reference/backend/dedupe_script.py:360). Spark-first design: candidate
-pairs are joined to the (projected, normalized) record table twice — two
-equi-joins Catalyst plans on its own — and then a single Arrow-batched
-pandas UDF computes the whole field-distance vector AND the sigmoid in one
-pass. The LR model is <1 KB: it travels to executors in the UDF closure (an
-explicit broadcast of a weight struct would buy nothing).
+/root/reference/backend/dedupe_script.py:360). Spark-first design: a single
+Arrow-batched pandas UDF computes the whole field-distance vector AND the
+sigmoid in one pass. The LR model is <1 KB: it travels to executors in the
+UDF closure (an explicit broadcast of a weight struct would buy nothing).
 
-Two physical strategies for getting field values to the kernel, picked by
-record-table size (``strategy="auto"``):
+One contract for every pair kernel in the engine (scoring here, the n-gram
+and bag-Jaccard verifies in operators/dedup.py): the ``lookup`` argument
+alone picks the physical path.
 
-- **broadcast lookup** (records fit in executor memory, the common case —
-  candidate pairs outnumber records by orders of magnitude): the projected
-  record fields are collected once into a Spark broadcast; the UDF receives
-  only ``(id1, id2)`` and gathers field values worker-side. Per-pair
-  shuffle + Arrow traffic drops from 2x(all field strings) to two ids —
-  on a DRAM-bandwidth-bound box that traffic reduction is the difference
-  between scaling and saturating (BENCH.md scaling protocol).
-- **join** (records too large to broadcast — the 100 TB path): ship fields
-  through the pair join as before; the shuffle is unavoidable then, and
-  Catalyst/AQE handle join strategy and skew.
+- **lookup given** (a :class:`RecordLookup`): pairs carry only
+  ``(id1, id2)``; :func:`gather_pairs` resolves ids to row positions in the
+  broadcast and runs the kernel on the gathered values worker-side.
+  Per-pair shuffle + Arrow traffic drops from 2x(all field strings) to two
+  ids — on a DRAM-bandwidth-bound box that is the difference between
+  scaling and saturating (BENCH.md scaling protocol).
+- **lookup None**: field values ship through the pair join (the 100 TB
+  path — the shuffle is unavoidable then, and Catalyst/AQE handle join
+  strategy and skew).
+
+Both paths keep identical rows: a pair naming an id absent from the records
+is dropped (the inner join drops it; the gather masks it out). The size
+decision lives in :func:`try_build_lookup` alone — a lookup iff the record
+table fits :data:`BROADCAST_ROWS` and :data:`BROADCAST_BYTES` and its ids
+are unique — called once by whoever owns the record table and passed down
+(``lookup=track(try_build_lookup(...))``; ``track(None)`` is None).
 
 Field types mirror dedupe variables (dedupe_script.py:266-286):
   String   -> Jaro-Winkler + normalized Levenshtein (affine-gap stand-ins)
@@ -35,6 +40,7 @@ matching dedupe's missing-data treatment.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -47,8 +53,13 @@ from ..functions.features import (  # noqa: F401  (re-exported public API)
     feature_names,
     lookup_positions,
 )
-from ..lifecycle import track
 from ..model import LogisticModel, sigmoid
+
+# Broadcast-lookup size caps (see try_build_lookup). The byte cap is what
+# protects the driver from a few million *wide* documents slipping under
+# the row cap.
+BROADCAST_ROWS = 2_000_000
+BROADCAST_BYTES = 256 * 1024 * 1024
 
 
 # ---------------------------------------------------------------------------
@@ -79,7 +90,8 @@ def attach_pair_fields(
 
 
 class RecordLookup:
-    """Broadcast (id -> match-field values) table for lookup-side scoring.
+    """Broadcast (id -> match-field values) table: the lookup path of the
+    pair kernels (:func:`gather_pairs`).
 
     Holds a pandas Index over record ids plus one object ndarray per match
     field, shipped to executors as a Spark broadcast (torrent, once per
@@ -138,18 +150,10 @@ class RecordLookup:
         self._bc.destroy()
 
 
-def fits_broadcast(
-    records: DataFrame,
-    size_cols: list[str],
-    broadcast_rows: int,
-    broadcast_bytes: int,
-) -> bool:
-    """One combined row-count + byte-size aggregate over ``size_cols``.
-
-    The byte cap is what protects the driver from a few-million *wide*
-    documents slipping under the row cap. Eager (runs a job) — callers on
-    the lazy-builder contract pass a prebuilt lookup instead.
-    """
+def fits_broadcast(records: DataFrame, size_cols: list[str]) -> bool:
+    """One combined row-count + byte-size aggregate over ``size_cols``,
+    checked against :data:`BROADCAST_ROWS` and :data:`BROADCAST_BYTES`.
+    Eager (runs a job)."""
     sizes = records.agg(
         F.count("*").alias("n"),
         F.coalesce(
@@ -163,7 +167,7 @@ def fits_broadcast(
         ).alias("nbytes"),
     ).collect()[0]
     return (
-        int(sizes["n"]) <= broadcast_rows and int(sizes["nbytes"]) <= broadcast_bytes
+        int(sizes["n"]) <= BROADCAST_ROWS and int(sizes["nbytes"]) <= BROADCAST_BYTES
     )
 
 
@@ -172,15 +176,13 @@ def try_build_lookup(
     id_col: str,
     fields: list[FieldSpec],
     norm_suffix: str = "",
-    broadcast_rows: int = 2_000_000,
-    broadcast_bytes: int = 256 * 1024 * 1024,
 ) -> RecordLookup | None:
     """Build a RecordLookup iff the table fits the caps AND ids are unique;
-    None otherwise (callers fall back to the join strategy). This is the
-    cap-gated path long-lived owners (Deduper) use so a huge corpus never
+    None otherwise (the pair kernels then take the join path). The one
+    place the broadcast-or-join decision is made, so a huge corpus never
     OOMs the driver through an unconditional toPandas."""
     field_cols = [f.name + norm_suffix for f in fields]
-    if not fits_broadcast(records, field_cols, broadcast_rows, broadcast_bytes):
+    if not fits_broadcast(records, field_cols):
         return None
     try:
         return RecordLookup.build(records, id_col, fields, norm_suffix)
@@ -188,64 +190,71 @@ def try_build_lookup(
         return None
 
 
-def make_lookup_score_udf(
-    model: LogisticModel, fields: list[FieldSpec], lookup: RecordLookup
-):
-    """pandas UDF (id1, id2) -> double match probability, gathering field
-    values from the broadcast lookup worker-side."""
+def gather_pairs(
+    pairs: DataFrame,
+    lookup: RecordLookup,
+    kernel,
+    return_type,
+    name: str,
+    repartition: bool = True,
+) -> DataFrame:
+    """(id1, id2, ``name``): a pair kernel run on values gathered
+    worker-side from ``lookup`` — the lookup path of every pair kernel.
+
+    ``kernel(value, p1, p2)`` gets the broadcast value dict and the row
+    positions of pairs whose ids are both present, and returns one result
+    per pair (None drops the pair). Pairs naming an absent id are dropped
+    — the same pairs the inner pair join drops on the join path.
+    ``repartition``: see :func:`score_pairs`' ``repartition_pairs``.
+    """
+    slim = pairs.select("id1", "id2")
+    if repartition:
+        par = pairs.sparkSession.sparkContext.defaultParallelism
+        slim = slim.repartition(par * 3)
+    bc = lookup.broadcast
+
+    @pandas_udf(return_type)
+    def _gather(id1: pd.Series, id2: pd.Series) -> pd.Series:
+        lk = bc.value
+        p1 = lookup_positions(lk, id1.to_numpy())
+        p2 = lookup_positions(lk, id2.to_numpy())
+        ok = (p1 >= 0) & (p2 >= 0)
+        if ok.all():
+            return pd.Series(kernel(lk, p1, p2))
+        sel = np.flatnonzero(ok)
+        got = kernel(lk, p1[sel], p2[sel]) if len(sel) else []
+        # absent pairs come back null (None, or NaN in a float result)
+        out = pd.Series(got, index=sel).reindex(pd.RangeIndex(len(ok)))
+        return out.where(ok, None)
+
+    keep = F.col(name).isNotNull()
+    if isinstance(return_type, DoubleType):
+        keep &= ~F.isnan(name)
+    # the kernel is the most expensive expression in its plan;
+    # asNondeterministic stops Catalyst pushing filters on its output below
+    # the exchange and re-evaluating the UDF once per consumer (observed: a
+    # where() on the score column planned TWO ArrowEvalPython nodes)
+    return slim.select(
+        "id1", "id2", _gather.asNondeterministic()("id1", "id2").alias(name)
+    ).where(keep)
+
+
+def _linear(model: LogisticModel, fields: list[FieldSpec]):
     expected = feature_names(fields)
     if model.feature_names and model.feature_names != expected:
         raise ValueError(
             f"model features {model.feature_names} != spec {expected}"
         )
-    w = model.weights.copy()
-    b = float(model.intercept)
-    fields = list(fields)
-    bc = lookup.broadcast
-
-    @pandas_udf(DoubleType())
-    def _score(id1: pd.Series, id2: pd.Series) -> pd.Series:
-        import numpy as np
-
-        lk = bc.value
-        p1 = lookup_positions(lk, id1.to_numpy())
-        p2 = lookup_positions(lk, id2.to_numpy())
-        # pairs referencing ids absent from records score null (the caller
-        # filters them) — the same pairs an inner join in the join strategy
-        # would drop, so both physical paths keep identical semantics
-        ok = (p1 >= 0) & (p2 >= 0)
-        left = {
-            f.name: pd.Series(lk["cols"][f.name][np.where(ok, p1, 0)])
-            for f in fields
-        }
-        right = {
-            f.name: pd.Series(lk["cols"][f.name][np.where(ok, p2, 0)])
-            for f in fields
-        }
-        X = compute_features(left, right, fields)
-        s = sigmoid(X @ w + b)
-        return pd.Series(np.where(ok, s, np.nan))
-
-    # the scoring kernel is the most expensive expression in the engine;
-    # asNondeterministic stops Catalyst pushing score-filters below the
-    # exchange and re-evaluating the UDF once per consumer (observed: a
-    # where() on the score column planned TWO ArrowEvalPython nodes)
-    return _score.asNondeterministic()
+    return model.weights.copy(), float(model.intercept)
 
 
-def make_score_udf(model: LogisticModel, fields: list[FieldSpec], norm_suffix: str = ""):
+def make_score_udf(model: LogisticModel, fields: list[FieldSpec]):
     """pandas UDF (l_f1, r_f1, l_f2, r_f2, ...) -> double match probability.
 
     Column order: interleaved left/right per field, in ``fields`` order. The
     model's feature_names must equal feature_names(fields).
     """
-    expected = feature_names(fields)
-    if model.feature_names and model.feature_names != expected:
-        raise ValueError(
-            f"model features {model.feature_names} != spec {expected}"
-        )
-    w = model.weights.copy()
-    b = float(model.intercept)
+    w, b = _linear(model, fields)
     fields = list(fields)
 
     @pandas_udf(DoubleType())
@@ -255,8 +264,22 @@ def make_score_udf(model: LogisticModel, fields: list[FieldSpec], norm_suffix: s
         X = compute_features(left, right, fields)
         return pd.Series(sigmoid(X @ w + b))
 
-    # see make_lookup_score_udf: prevent duplicate evaluation via pushdown
+    # see gather_pairs: prevent duplicate evaluation via pushdown
     return _score.asNondeterministic()
+
+
+def _score_kernel(model: LogisticModel, fields: list[FieldSpec]):
+    """:func:`gather_pairs` kernel: match probability of each gathered pair."""
+    w, b = _linear(model, fields)
+    fields = list(fields)
+
+    def kernel(lk: dict, p1: np.ndarray, p2: np.ndarray) -> np.ndarray:
+        cols = lk["cols"]
+        left = {f.name: pd.Series(cols[f.name][p1]) for f in fields}
+        right = {f.name: pd.Series(cols[f.name][p2]) for f in fields}
+        return sigmoid(compute_features(left, right, fields) @ w + b)
+
+    return kernel
 
 
 def score_pairs(
@@ -267,26 +290,17 @@ def score_pairs(
     id_col: str,
     norm_suffix: str = "_norm",
     threshold: float | None = None,
-    strategy: str = "auto",
     lookup: RecordLookup | None = None,
-    broadcast_rows: int = 2_000_000,
-    broadcast_bytes: int = 256 * 1024 * 1024,
     repartition_pairs: bool = True,
 ) -> DataFrame:
     """(id1, id2, score) for every candidate pair; optional threshold filter
     (reference M8: keep score >= similarity_threshold,
     dedupe_script.py:341-342).
 
-    ``strategy``: "broadcast" gathers field values from a :class:`RecordLookup`
-    worker-side (pairs carry only ids — see module docstring); "join" ships
-    fields through the pair join (the at-scale path — always honored, even
-    when a ``lookup`` is passed); "auto" broadcasts iff the record table is
-    both <= ``broadcast_rows`` rows AND <= ``broadcast_bytes`` of match-field
-    bytes (one combined count+size aggregate over the — typically cached/
-    checkpointed — record table; the byte cap is what protects the driver
-    from a few million *wide* documents). Pass a prebuilt ``lookup`` to skip
-    both the sizing scan and the per-call collect when scoring repeatedly
-    against the same records.
+    ``lookup`` picks the path (module docstring): given, field values are
+    gathered from it worker-side and ``records`` is not read; None, they
+    ship through the pair join with ``records``. Owners of a record table
+    pass ``try_build_lookup(records, ...)``.
 
     ``repartition_pairs``: spread the UDF stage to 3 tasks/core. AQE's
     byte-based coalescing is tuned for JVM operators; a pandas-UDF stage is
@@ -299,35 +313,16 @@ def score_pairs(
     getNumPartitions() probe: materializing the partition count under AQE
     executes the whole upstream plan as throwaway jobs.)
     """
-    par = pairs.sparkSession.sparkContext.defaultParallelism
-    if strategy not in ("auto", "join", "broadcast"):
-        raise ValueError(f"unknown scoring strategy {strategy!r}")
-    if strategy == "join":
-        lookup = None
-    elif lookup is None:
-        if strategy == "broadcast":
-            lookup = RecordLookup.build(records, id_col, fields, norm_suffix)
-        else:
-            lookup = try_build_lookup(
-                records, id_col, fields, norm_suffix, broadcast_rows, broadcast_bytes
-            )
-        if lookup is not None:
-            # call-local broadcast: released at the harness' next
-            # release_session_storage (a caller-passed lookup is the
-            # caller's to destroy)
-            track(lookup)
     if lookup is not None:
-        slim = pairs.select("id1", "id2")
-        if repartition_pairs:
-            slim = slim.repartition(par * 3)
-        udf = make_lookup_score_udf(model, fields, lookup)
-        scored = slim.select(
-            "id1", "id2", udf("id1", "id2").alias("score")
-        ).where(F.col("score").isNotNull() & ~F.isnan("score"))
+        scored = gather_pairs(
+            pairs, lookup, _score_kernel(model, fields), DoubleType(), "score",
+            repartition_pairs,
+        )
     else:
         field_cols = [f.name + norm_suffix for f in fields]
         wide = attach_pair_fields(pairs, records, id_col, field_cols)
         if repartition_pairs:
+            par = pairs.sparkSession.sparkContext.defaultParallelism
             wide = wide.repartition(par * 3)
         udf = make_score_udf(model, fields)
         in_cols = []

@@ -44,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .lifecycle import track
 from .model import LogisticModel, fit_logistic
 from .normalize import normalize_features
 from .operators import blocking as B
@@ -197,13 +198,6 @@ def train_model(
     X = compute_features(left, right, fields)
     y = (wide["label"] == "y").to_numpy(dtype=np.float64)
     return fit_logistic(X, y, l2=l2, feature_names=feature_names(fields))
-
-
-def uncertain_pairs(
-    scored: DataFrame, k: int = 10
-) -> DataFrame:
-    """Active-learning pair selection (M3): top-k closest to the boundary."""
-    return scored.orderBy(F.abs(F.col("score") - 0.5).asc(), "id1", "id2").limit(k)
 
 
 # ---------------------------------------------------------------------------
@@ -804,7 +798,12 @@ class Pipeline:
             "scored_pairs",
             [k_cnd, model_key],
             lambda: SC.score_pairs(
-                cands, records, model, cfg.fields, cfg.id_col, cfg.norm_suffix
+                cands, records, model, cfg.fields, cfg.id_col, cfg.norm_suffix,
+                lookup=track(
+                    SC.try_build_lookup(
+                        records, cfg.id_col, cfg.fields, cfg.norm_suffix
+                    )
+                ),
             ),
         )
         # blocking recall of labeled positives — the guard metric for

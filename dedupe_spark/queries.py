@@ -31,7 +31,12 @@ from .operators import evalmetrics as EV
 from .operators import packing as PK
 from .operators.assemble import assemble_clusters
 from .operators.clustering import connected_components, member_confidence
-from .operators.scoring import FieldSpec, feature_names, score_pairs
+from .operators.scoring import (
+    FieldSpec,
+    feature_names,
+    score_pairs,
+    try_build_lookup,
+)
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -3397,7 +3402,8 @@ def er_clusters_pipeline(
         block_stats.update(B.dropped_block_stats(blocks, 500))
     t0 = _time.time()
     scored = score_pairs(
-        cands, records, FLAGSHIP_MODEL, DOC_FIELDS, "doc_id", "_norm"
+        cands, records, FLAGSHIP_MODEL, DOC_FIELDS, "doc_id", "_norm",
+        lookup=track(try_build_lookup(records, "doc_id", DOC_FIELDS, "_norm")),
     )
     # materialize scored edges once: connected_components AND
     # member_confidence both consume this relation — without the checkpoint
@@ -9365,7 +9371,8 @@ def q_er_clusters_sql(spark, sf_dir):
     )
     cands = B.candidate_pairs(blocks, max_block=500, salt_target=100)
     scored = score_pairs(
-        cands, records, FLAGSHIP_MODEL, DOC_FIELDS, "doc_id", "_norm"
+        cands, records, FLAGSHIP_MODEL, DOC_FIELDS, "doc_id", "_norm",
+        lookup=track(try_build_lookup(records, "doc_id", DOC_FIELDS, "_norm")),
     )
     edges = scored.where(F.col("score") >= 0.5).localCheckpoint(eager=True)
     assign = member_confidence(connected_components(edges), edges)

@@ -244,7 +244,7 @@ def streaming_minhash_near_dup(
         "id_new",
         "id_corpus",
         # asNondeterministic: stop Catalyst re-evaluating the kernel under
-        # the threshold filter (see operators/scoring.make_lookup_score_udf)
+        # the threshold filter (see operators/scoring.gather_pairs)
         _jac.asNondeterministic()("_ntxt", "_ctxt").alias("jaccard"),
     )
     if jaccard_threshold is not None:
@@ -686,15 +686,6 @@ def streaming_er_assign(
     rtype = assignments.schema["record_id"].dataType
     ctype = assignments.schema["cluster_id"].dataType
 
-    def _read(path: str, schema: StructType) -> DataFrame:
-        # a run whose every epoch wrote zero rows leaves no parquet footer
-        # to infer from (partitioned writes skip empty partitions) — fall
-        # back to an empty frame with the operator's known schema
-        try:
-            return spark.read.parquet(path)
-        except Exception:
-            return spark.createDataFrame([], schema)
-
     a_schema = StructType(
         [
             StructField("record_id", rtype),
@@ -711,9 +702,12 @@ def streaming_er_assign(
             StructField("epoch", LongType()),
         ]
     )
+    # a run whose every epoch wrote zero rows leaves no parquet footer to
+    # infer from (partitioned writes skip empty partitions): read_epoch_sink
+    # maps exactly that, and a missing sink, to an empty frame
     return {
-        "assignments": _read(a_dir, a_schema),
-        "merge_hints": _read(h_dir, h_schema),
+        "assignments": read_epoch_sink(spark, a_dir, a_schema),
+        "merge_hints": read_epoch_sink(spark, h_dir, h_schema),
     }
 
 

@@ -43,7 +43,7 @@ def child(cpus: int, lockstep: bool = False) -> None:
             # tasks per core): per-batch kernel setup (factorize, unique
             # encode, get_indexer, Series construction) amortizes once —
             # A/B'd 15.3s vs 17.0s at width 32 AND round variance tightens
-            # to ±0.1s (scripts/w32_ab.py)
+            # to ±0.1s (BENCH.md, "Optimization log", the width-32 A/B)
             "spark.sql.execution.arrow.maxRecordsPerBatch": "100000",
         },
     )

@@ -2,7 +2,8 @@
 query on Spark and its DuckDB oracle twin, compare row count + column
 names + order-insensitive values.
 
-Usage: python tests/oracle_check.py [sf_dir] (default /root/testdata/sf0.01)
+Usage: python tests/oracle_check.py [sf_dir] [q1,q2,...]
+(default sf_dir /root/testdata/sf0.01; default: every query, then entry)
 """
 
 from __future__ import annotations
@@ -58,7 +59,7 @@ def dtype_kind_mismatches(a: pd.DataFrame, b: pd.DataFrame) -> list:
     return bad
 
 
-def main(sf_dir: str) -> int:
+def main(sf_dir: str, names: list[str] | None = None) -> int:
     import __spark_entry__ as entrymod
     from dedupe_spark.session import get_spark
 
@@ -71,6 +72,8 @@ def main(sf_dir: str) -> int:
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    if names:
+        queries = {n: queries[n] for n in names}
     failures = []
     for name, fn in queries.items():
         t0 = time.time()
@@ -102,21 +105,23 @@ def main(sf_dir: str) -> int:
             status += " (rows-only)"
         print(f"{name:24s} {status}  [{time.time() - t0:.1f}s]", flush=True)
 
-    ent = entrymod.entry(spark)
-    n = ent.count()
-    print(f"{'entry':24s} rows={n}")
-    if n < 0:
-        failures.append(("entry", "no rows"))
+    if not names:
+        n = entrymod.entry(spark).count()
+        print(f"{'entry':24s} rows={n}")
+        if n < 0:
+            failures.append(("entry", "no rows"))
 
     if failures:
         print("\nFAILURES:")
         for name, msg in failures:
             print(f"  {name}: {msg}")
         return 1
-    print(f"\nALL {len(queries)} queries OK ({len(oracles)} oracle-checked)")
+    n_checked = len(queries.keys() & oracles.keys())
+    print(f"\nALL {len(queries)} queries OK ({n_checked} oracle-checked)")
     return 0
 
 
 if __name__ == "__main__":
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    raise SystemExit(main(sf))
+    only = sys.argv[2].split(",") if len(sys.argv) > 2 else None
+    raise SystemExit(main(sf, only))

@@ -493,33 +493,69 @@ def test_dedup_provenance_precedence_and_consistency(spark):
     assert "minhash" in prov.values() and "simhash" in prov.values()
 
 
-def test_weighted_minhash_verify_strategies_agree(spark):
-    """The broadcast Arrow verify and the relational token-join verify
-    must emit IDENTICAL rows (same integers, same keep decisions) —
-    the dual-strategy contract of the family."""
-    d = spark.read.parquet(
+def _sf001_docs(spark):
+    return spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+
+
+def _sorted_pd(df):
+    return (
+        df.toPandas().sort_values(["id1", "id2"]).reset_index(drop=True)
+    )
+
+
+def test_weighted_minhash_verify_strategies_agree(spark):
+    """The gather verify (a weighted_verify_index lookup) and the
+    relational token-join verify (lookup None) must emit IDENTICAL rows
+    (same integers, same keep decisions) — the two-path contract of the
+    family."""
     import pandas as pd
 
-    j = (
-        D.weighted_minhash_pairs(
-            d, "doc_id", threshold=(4, 5), verify_strategy="join"
+    d = _sf001_docs(spark)
+    lk = D.weighted_verify_index(d, "doc_id", "text")
+    assert lk is not None
+    try:
+        j = _sorted_pd(
+            D.weighted_minhash_pairs(
+                d, "doc_id", threshold=(4, 5), verify_lookup=None
+            )
         )
-        .toPandas()
-        .sort_values(["id1", "id2"])
-        .reset_index(drop=True)
-    )
-    b = (
-        D.weighted_minhash_pairs(
-            d, "doc_id", threshold=(4, 5), verify_strategy="broadcast"
+        b = _sorted_pd(
+            D.weighted_minhash_pairs(
+                d, "doc_id", threshold=(4, 5), verify_lookup=lk
+            )
         )
-        .toPandas()
-        .sort_values(["id1", "id2"])
-        .reset_index(drop=True)
-    )
+    finally:
+        lk.destroy()
     pd.testing.assert_frame_equal(j, b)
     assert len(j) > 0
+
+
+def test_ngram_jaccard_verify_lookup_and_join_agree(spark):
+    """ngram_jaccard_verify gives identical rows through the pair join
+    (lookup None) and through a text_lookup gather — including dropping a
+    pair that names an absent id."""
+    import pandas as pd
+
+    from dedupe_spark.operators import blocking as B
+
+    d = _sf001_docs(spark)
+    blocks = B.generate_blocks(d, "doc_id", {"t2": B.first_tokens("text", 2)})
+    pairs = B.candidate_pairs(blocks, max_block=1000).unionByName(
+        spark.createDataFrame([("0", "ghost")], "id1 string, id2 string")
+    )
+    lk = D.text_lookup(d, "doc_id", "text")
+    assert lk is not None
+    try:
+        j = _sorted_pd(D.ngram_jaccard_verify(pairs, d, "doc_id", "text"))
+        b = _sorted_pd(
+            D.ngram_jaccard_verify(pairs, d, "doc_id", "text", lookup=lk)
+        )
+    finally:
+        lk.destroy()
+    pd.testing.assert_frame_equal(j, b)
+    assert len(j) > 0 and "ghost" not in set(j["id2"])
 
 
 def test_cross_source_dup_matrix_tiles_the_pair_relation(spark):

@@ -58,22 +58,9 @@ def test_deduper_close_destroys_lookup(spark):
     lifecycle.release_session_storage(spark)
 
 
-def test_scope_isolates_interleaved_builders(spark):
-    """ADVICE r3: a scope() block shields its tracked objects from a
-    global release_tracked() sweep (the interleaved-builders hazard) and
-    releases exactly its own objects at exit."""
-    from dedupe_spark import lifecycle as L
-
-    outer = spark.range(10).cache()
-    L.track(outer)
-    with L.scope() as mine:
-        inner = spark.range(5).cache()
-        L.track(inner)
-        assert mine == [inner]
-        # another builder's between-queries sweep fires NOW: the scoped
-        # cache must survive it, the global one is released
-        L.release_tracked()
-        assert inner.storageLevel.useMemory  # still cached
-        assert inner.count() == 5
-    assert not inner.storageLevel.useMemory  # released at scope exit
-    assert L.tracked_count() == 0
+def test_track_none_passes_through():
+    """track(None) returns None and tracks nothing, so owners can write
+    ``lookup=track(try_build_lookup(...))`` whichever way the caps go."""
+    before = lifecycle.tracked_count()
+    assert lifecycle.track(None) is None
+    assert lifecycle.tracked_count() == before

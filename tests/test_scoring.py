@@ -168,8 +168,9 @@ def test_score_pairs_matches_driver_model(spark):
 
 
 def test_score_pairs_strategies_agree(spark):
-    """The broadcast-lookup and join physical strategies must produce
-    identical scores — they are alternative data paths to one kernel."""
+    """The lookup (gather) and join physical paths must produce identical
+    scores — they are alternative data paths to one kernel."""
+    from dedupe_spark.operators.scoring import try_build_lookup
     import random
 
     rng = random.Random(9)
@@ -189,18 +190,23 @@ def test_score_pairs_strategies_agree(spark):
     model = LogisticModel(
         np.array([2.0, 1.0, -1.0, 1.5, -1.0]), -2.0, feature_names(fields)
     )
-    a = {
-        (r["id1"], r["id2"]): r["score"]
-        for r in score_pairs(
-            pairs, records, model, fields, "url", "n", strategy="join"
-        ).collect()
-    }
-    b = {
-        (r["id1"], r["id2"]): r["score"]
-        for r in score_pairs(
-            pairs, records, model, fields, "url", "n", strategy="broadcast"
-        ).collect()
-    }
+    lk = try_build_lookup(records, "url", fields, "n")
+    assert lk is not None
+    try:
+        a = {
+            (r["id1"], r["id2"]): r["score"]
+            for r in score_pairs(
+                pairs, records, model, fields, "url", "n", lookup=None
+            ).collect()
+        }
+        b = {
+            (r["id1"], r["id2"]): r["score"]
+            for r in score_pairs(
+                pairs, records, model, fields, "url", "n", lookup=lk
+            ).collect()
+        }
+    finally:
+        lk.destroy()
     assert set(a) == set(b)
     for k in a:
         assert a[k] == pytest.approx(b[k], abs=1e-12)
@@ -225,7 +231,7 @@ def test_lookup_positions_dense_matches_index():
 def test_record_lookup_dense_int_ids(spark):
     """Contiguous int record ids (the row-index record_id case) take the
     dense fast path: the broadcast value carries base/n instead of a pandas
-    Index, and scores match the join strategy bit-for-bit — including
+    Index, and scores match the join path bit-for-bit — including
     dropping pairs whose ids fall outside the range."""
     from dedupe_spark.operators.scoring import RecordLookup
 
@@ -252,7 +258,7 @@ def test_record_lookup_dense_int_ids(spark):
         via_join = {
             (r["id1"], r["id2"]): r["score"]
             for r in score_pairs(
-                pairs, records, model, fields, "rid", "n", strategy="join"
+                pairs, records, model, fields, "rid", "n", lookup=None
             ).collect()
         }
         assert set(via_lookup) == set(via_join) == {(7, 18), (9, 9)}
@@ -288,9 +294,11 @@ def test_record_lookup_guards(spark):
 
 
 def test_score_pairs_missing_ids_dropped_both_strategies(spark):
-    """Pairs referencing ids absent from records are dropped by BOTH
-    physical strategies (the join path drops via inner join; the lookup
-    path must not flip that into a crash)."""
+    """Pairs referencing ids absent from records are dropped on BOTH
+    physical paths (the join path drops via inner join; the gather path
+    must not flip that into a crash)."""
+    from dedupe_spark.operators.scoring import RecordLookup
+
     records = spark.createDataFrame(
         [("u1", "a"), ("u2", "a")], "url string, f_n string"
     )
@@ -299,35 +307,50 @@ def test_score_pairs_missing_ids_dropped_both_strategies(spark):
     )
     fields = [FieldSpec("f_", "String")]
     model = LogisticModel(np.array([1.0, 1.0, -1.0]), 0.0, feature_names(fields))
-    for strat in ("join", "broadcast"):
-        got = score_pairs(
-            pairs, records, model, fields, "url", "n", strategy=strat
-        ).collect()
-        assert [(r["id1"], r["id2"]) for r in got] == [("u1", "u2")], strat
+    lk = RecordLookup.build(records, "url", fields, "n")
+    try:
+        for lookup in (None, lk):
+            got = score_pairs(
+                pairs, records, model, fields, "url", "n", lookup=lookup
+            ).collect()
+            assert [(r["id1"], r["id2"]) for r in got] == [("u1", "u2")], lookup
+    finally:
+        lk.destroy()
 
 
-def test_score_pairs_join_strategy_ignores_lookup(spark):
-    """strategy='join' (the documented at-scale path) must win even when a
-    stale lookup object is passed — scores come from `records`."""
-    from dedupe_spark.operators.scoring import RecordLookup
+def test_gather_pairs_absent_ids_any_return_type(spark):
+    """The shared gather drops absent-id pairs and kernel-None rows for a
+    non-double result too, and hands the kernel only present positions."""
+    from pyspark.sql.types import ArrayType, LongType
 
-    fields = [FieldSpec("f_", "String")]
-    model = LogisticModel(np.array([4.0, 2.0, -1.0]), -3.0, feature_names(fields))
-    stale = spark.createDataFrame(
-        [("u1", "xxxx"), ("u2", "yyyy")], "url string, f_n string"
-    )
-    lookup = RecordLookup.build(stale, "url", fields, "n")
+    from dedupe_spark.operators.scoring import RecordLookup, gather_pairs
+
     records = spark.createDataFrame(
-        [("u1", "same"), ("u2", "same")], "url string, f_n string"
+        [("u1", "a"), ("u2", "bb"), ("u3", "ccc")], "url string, f string"
     )
-    pairs = spark.createDataFrame([("u1", "u2")], "id1 string, id2 string")
-    got = score_pairs(
-        pairs, records, model, fields, "url", "n",
-        strategy="join", lookup=lookup,
-    ).collect()
-    # identical under `records` -> jw=lev=1 -> sigmoid(3) ~ 0.95; the stale
-    # lookup would have given dissimilar strings and a near-zero score
-    assert got[0]["score"] > 0.9
+    pairs = spark.createDataFrame(
+        [("u1", "u2"), ("u1", "ghost"), ("u2", "u3"), ("u3", "u3")],
+        "id1 string, id2 string",
+    )
+
+    def lengths(lk, p1, p2):
+        t = lk["cols"]["f"]
+        assert (p1 >= 0).all() and (p2 >= 0).all()
+        return [
+            None if a == b else [len(t[a]), len(t[b])] for a, b in zip(p1, p2)
+        ]
+
+    lk = RecordLookup.build(records, "url", [FieldSpec("f", "String")], "")
+    try:
+        got = gather_pairs(
+            pairs, lk, lengths, ArrayType(LongType()), "lens"
+        ).collect()
+    finally:
+        lk.destroy()
+    assert sorted((r.id1, r.id2, r.lens) for r in got) == [
+        ("u1", "u2", [1, 2]),
+        ("u2", "u3", [2, 3]),
+    ]
 
 
 def test_score_pairs_threshold(spark):

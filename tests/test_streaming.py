@@ -651,7 +651,8 @@ def test_streaming_sink_read_error_contract(spark, tmp_path):
     must yield an empty frame WITH the requested schema, but a sink
     containing a corrupt parquet file is a genuine read failure and must
     PROPAGATE — never silently report zero results. Drives the actual
-    handler on both contract cases."""
+    handler on both contract cases, then streaming_er_assign's two sinks
+    through it."""
     import pytest
     from pyspark.sql.types import LongType, StructField, StructType
 
@@ -676,3 +677,40 @@ def test_streaming_sink_read_error_contract(spark, tmp_path):
     assert "PATH_NOT_FOUND" not in msg
     assert "Path does not exist" not in msg
     assert "UNABLE_TO_INFER_SCHEMA" not in msg  # third eaten class
+
+    # (c) streaming_er_assign reads BOTH its sinks through the same
+    # handler: an empty stream leaves neither sink behind -> empty frames
+    # with the operator's schemas; a corrupt file in either sink propagates
+    from dedupe_spark.streaming.incremental import streaming_er_assign
+
+    arrivals = tmp_path / "arrivals"
+    arrivals.mkdir()
+    corpus = spark.createDataFrame(
+        [("c1", "alpha beta gamma delta epsilon")], "doc_id string, text string"
+    )
+    assignments = spark.createDataFrame(
+        [("c1", "c1")], "record_id string, cluster_id string"
+    )
+
+    def run(out_dir):
+        stream = spark.readStream.schema("doc_id string, text string").parquet(
+            str(arrivals)
+        )
+        return streaming_er_assign(
+            spark, stream, corpus, assignments, str(out_dir)
+        )
+
+    empty = run(tmp_path / "er_empty")
+    assert empty["assignments"].count() == 0
+    assert empty["merge_hints"].count() == 0
+    assert empty["assignments"].columns == ["record_id", "cluster_id", "epoch"]
+    assert empty["merge_hints"].columns == [
+        "cluster_a", "cluster_b", "via", "score", "epoch"
+    ]
+    for sink in ("assignments", "merge_hints"):
+        out_dir = tmp_path / f"er_corrupt_{sink}"
+        (out_dir / sink).mkdir(parents=True)
+        (out_dir / sink / "part-0000.parquet").write_bytes(b"not parquet")
+        with pytest.raises(Exception) as ei:
+            run(out_dir)[sink].collect()
+        assert "UNABLE_TO_INFER_SCHEMA" not in str(ei.value), sink
