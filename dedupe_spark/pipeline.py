@@ -3,8 +3,9 @@
 ``ingest -> normalize -> block -> candidates -> score -> cluster -> assemble``,
 each stage a pure DataFrame -> DataFrame function that writes a parquet
 checkpoint plus a metrics JSON and can be resumed: a stage whose content key
-(hash of config + upstream keys) matches an existing COMMITTED checkpoint is
-read back instead of recomputed (north rule: "resumable from checkpoint with
+(hash of the config fields the stage reads + upstream keys, see
+``STAGE_CONFIG``) matches an existing COMMITTED checkpoint is read back
+instead of recomputed (north rule: "resumable from checkpoint with
 per-partition lineage + metrics"). Commits are atomic, Iceberg-style
 (VERDICT r3 item 2): the stage writes to a staging directory, fsyncs a
 manifest recording key + schema + the data-file list with sizes, and a
@@ -207,20 +208,34 @@ def train_model(
 
 @dataclass
 class PipelineConfig:
+    """Pipeline settings. Each field's comment names the checkpointed
+    stages whose resume key it is part of (``STAGE_CONFIG``); a field
+    keyed by no stage changes what is stored, never what is computed."""
+
     workdir: str
+    # keys cluster_assignments
     threshold: float = 0.5
+    # keys blocks (the adaptive ladder's cap) and candidate_pairs (the
+    # mega-block guard)
     max_block: int = 500
+    # keys candidate_pairs
     salt_target: int = 100
+    # keys blocks, scored_pairs and clusters
     id_col: str = "url"
+    # keys blocks and scored_pairs
     norm_suffix: str = "_norm"
+    # keys scored_pairs
     fields: list[FieldSpec] = field(default_factory=lambda: list(PAGE_FIELDS))
+    # keys scored_pairs (through the model it trains)
     l2: float = 0.1
     # "none" -> unweighted token cosine for Text fields; "corpus" -> compute
-    # a bounded IDF table from the records stage and weight the cosine
+    # a bounded IDF table from the records stage and weight the cosine.
+    # Both key scored_pairs.
     tfidf: str = "none"
     idf_top_k: int = 1 << 18
     # within-component hierarchical refinement (SURVEY M9 optional step):
-    # splits weakly-chained components at the threshold's cophenetic cut
+    # splits weakly-chained components at the threshold's cophenetic cut.
+    # Keys cluster_assignments.
     refine: bool = False
     # Iceberg-style snapshot history: how many SUPERSEDED snapshots to
     # retain per stage (the live committed one is never counted). A stage
@@ -231,19 +246,16 @@ class PipelineConfig:
     # changes what is kept, never what is computed.
     snapshot_retention: int = 2
     # "off" | "builtin" | "parser": fill NULL text from the html binary
-    # column at ingest (fill_text_from_html). Part of key_dict — it
-    # changes what the records stage computes.
+    # column at ingest (fill_text_from_html). Keys records.
     extract_html: str = "off"
     # add the host+Soundex(first title token) blocking predicate — the
-    # phonetic predicate-zoo member. Part of key_dict — it changes the
-    # block relation.
+    # phonetic predicate-zoo member. Keys blocks.
     phonetic_blocking: bool = False
     # replace the fixed host_t1 predicate with overflow-driven key
     # refinement (blocking.adaptive_block_keys): host|t1 → host|t1|t2 →
     # host|path12, each block settling at the shallowest level fitting
     # max_block — the answer to fixed-key cap collapse under corpus
-    # growth (BENCH.md 10× stress). Part of key_dict — it changes the
-    # block relation.
+    # growth (BENCH.md 10× stress). Keys blocks.
     adaptive_blocking: bool = False
     # "parquet" (default): the filesystem manifest-then-rename snapshot
     # protocol below. "iceberg" | "delta": commit every stage checkpoint
@@ -262,14 +274,40 @@ class PipelineConfig:
             "max_block": self.max_block,
             "salt_target": self.salt_target,
             "id_col": self.id_col,
+            "norm_suffix": self.norm_suffix,
             "fields": [(f.name, f.type, f.has_missing) for f in self.fields],
             "l2": self.l2,
             "tfidf": self.tfidf,
+            "idf_top_k": self.idf_top_k,
             "refine": self.refine,
             "extract_html": self.extract_html,
             "phonetic_blocking": self.phonetic_blocking,
             "adaptive_blocking": self.adaptive_blocking,
         }
+
+
+# The key_dict fields each checkpointed stage of Pipeline.run reads. A
+# stage's resume key hashes only these plus its parents' keys, so a
+# threshold-only rerun resumes everything up to scored_pairs. Inputs read
+# through another stage come in as that stage's key: scored_pairs and
+# clusters take k_rec because they read records directly, and scored_pairs
+# takes the trained model's hash. A stage not listed here is keyed on the
+# whole key_dict.
+STAGE_CONFIG: dict[str, tuple[str, ...]] = {
+    "records": ("extract_html",),
+    "blocks": (
+        "id_col",
+        "norm_suffix",
+        "phonetic_blocking",
+        "adaptive_blocking",
+        "max_block",
+    ),
+    "candidate_pairs": ("max_block", "salt_target"),
+    # l2 and the fields also reach the stage through the model
+    "scored_pairs": ("fields", "id_col", "norm_suffix", "tfidf", "idf_top_k", "l2"),
+    "cluster_assignments": ("threshold", "refine"),
+    "clusters": ("id_col",),
+}
 
 
 class Pipeline:
@@ -293,8 +331,11 @@ class Pipeline:
     # -- checkpoint machinery ------------------------------------------------
 
     def _stage_key(self, name: str, parents: list[str]) -> str:
+        config = self.cfg.key_dict()
+        if name in STAGE_CONFIG:
+            config = {k: config[k] for k in STAGE_CONFIG[name]}
         payload = json.dumps(
-            {"stage": name, "config": self.cfg.key_dict(), "parents": parents},
+            {"stage": name, "config": config, "parents": parents},
             sort_keys=True,
         )
         return hashlib.sha256(payload.encode()).hexdigest()[:16]
@@ -538,6 +579,29 @@ class Pipeline:
                 os.close(fd)
         except OSError:
             pass
+
+    def _add_stage_metrics(self, name: str, extra: dict) -> None:
+        """Store ``extra`` in stage ``name``'s committed metrics, so a
+        resume of that checkpoint restores it. A metadata-only commit
+        after the data commit (an atomic manifest replace, or the
+        catalog's property commit): a crash between the two leaves a
+        resumable checkpoint without ``extra``."""
+        self.metrics[name] = self.metrics[name] | extra
+        if self.catalog is not None:
+            self.catalog.set_metrics(name, self.metrics[name])
+            return
+        path = os.path.join(self.cfg.workdir, name)
+        man = self._read_manifest(path)
+        man["metrics"] = man["metrics"] | extra
+        tmp = os.path.join(path, self.MANIFEST + ".tmp")
+        with open(tmp, "w") as fh:
+            json.dump(man, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, os.path.join(path, self.MANIFEST))
+        self._fsync_path(path)
+        with open(path + ".metrics.json", "w") as fh:
+            json.dump(man["metrics"], fh)
 
     def _stage_catalog(self, name: str, key: str, compute) -> tuple[DataFrame, str]:
         """Catalog-backed variant of :meth:`stage` (table_format iceberg/
@@ -788,15 +852,19 @@ class Pipeline:
             [k_blk],
             lambda: B.candidate_pairs(blocks, cfg.max_block, cfg.salt_target),
         )
-        # no silent caps: record what the mega-block guard discarded
-        # (skipped on resume — the stats were computed with the checkpoint)
-        if not self.metrics["candidate_pairs"].get("resumed"):
-            self.metrics["blocks_dropped"] = B.warn_dropped_blocks(
+        # no silent caps: record what the mega-block guard discarded. The
+        # stats are stored with the checkpoint, so a resume restores them;
+        # only a commit that crashed before storing them recomputes them
+        dropped = self.metrics["candidate_pairs"].get("blocks_dropped")
+        if dropped is None:
+            dropped = B.warn_dropped_blocks(
                 blocks, cfg.max_block, context="pipeline.candidate_pairs"
             )
+            self._add_stage_metrics("candidate_pairs", {"blocks_dropped": dropped})
+        self.metrics["blocks_dropped"] = dropped
         scored, k_sco = self.stage(
             "scored_pairs",
-            [k_cnd, model_key],
+            [k_cnd, k_rec, model_key],
             lambda: SC.score_pairs(
                 cands, records, model, cfg.fields, cfg.id_col, cfg.norm_suffix,
                 lookup=track(
@@ -825,14 +893,10 @@ class Pipeline:
                 assign = C.refine_components(assign, edges, cfg.threshold)
             return C.member_confidence(assign, edges)
 
-        assign, k_asn = self.stage(
-            "cluster_assignments",
-            [k_sco, f"th={cfg.threshold}", f"refine={cfg.refine}"],
-            _cluster,
-        )
+        assign, k_asn = self.stage("cluster_assignments", [k_sco], _cluster)
         clusters, _ = self.stage(
             "clusters",
-            [k_asn],
+            [k_asn, k_rec],
             lambda: assemble_clusters(
                 assign,
                 records,

@@ -9,8 +9,11 @@ Cluster:
 Sandbox smoke (fixture corpus, local master):
     python scripts/run_pipeline.py --fixture --workdir /tmp/run1 --master 'local[8]'
 
-Stages checkpoint under --workdir and resume on rerun (same config key).
-Prints one JSON line of stage metrics + pairwise F1 at the end.
+Stages checkpoint under --workdir. On a rerun each stage resumes when the
+config fields it reads and its upstream stages are unchanged, so a rerun
+with only --threshold changed recomputes just the two clustering stages.
+Prints one JSON line at the end: the stage metrics, the list of stages the
+run resumed ("resumed_stages") and pairwise F1.
 """
 
 from __future__ import annotations
@@ -82,6 +85,7 @@ def main() -> None:
     pl = Pipeline(spark, cfg)
     out = pl.run(pages, labels)
     metrics = dict(pl.metrics)
+    metrics["resumed_stages"] = [n for n, m in pl.metrics.items() if m.get("resumed")]
     metrics["pairwise_f1"] = pairwise_f1(out["assignments"], labels)
     metrics["n_clusters"] = out["clusters"].count()
     print(json.dumps(metrics, default=str))

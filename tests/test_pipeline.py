@@ -14,12 +14,16 @@ from pyspark.sql import functions as F
 
 from dedupe_spark.fixtures import make_labeled_pairs, make_pages
 from dedupe_spark.pipeline import (
+    PAGE_FIELDS_DEDUPE,
+    STAGE_CONFIG,
     Pipeline,
     PipelineConfig,
     pages_df,
     pairwise_f1,
     prepare_pages,
 )
+
+UPSTREAM = {"records", "blocks", "candidate_pairs", "scored_pairs"}
 
 
 @pytest.fixture(scope="module")
@@ -86,7 +90,7 @@ def test_resume_skips_and_matches(run, corpus, spark):
     pl2 = Pipeline(spark, PipelineConfig(workdir=wd, threshold=0.5))
     out2 = pl2.run(pages, lab)
     resumed = [n for n, m in pl2.metrics.items() if m.get("resumed")]
-    assert set(resumed) >= {"records", "blocks", "candidate_pairs", "scored_pairs"}
+    assert set(resumed) >= UPSTREAM
     a = out["clusters"].select("cluster_id", "group_size").collect()
     b = out2["clusters"].select("cluster_id", "group_size").collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
@@ -98,6 +102,131 @@ def test_config_change_invalidates(run, corpus, spark):
     pl3 = Pipeline(spark, PipelineConfig(workdir=wd, threshold=0.7))
     out3 = pl3.run(pages, lab)
     assert pl3.metrics["cluster_assignments"]["resumed"] is False
+    assert all(pl3.metrics[n]["resumed"] for n in UPSTREAM)
+
+
+def _resumed(pl) -> set:
+    return {n for n, m in pl.metrics.items() if m.get("resumed")}
+
+
+def _assignments(out) -> list:
+    return sorted(
+        tuple(r) for r in out["assignments"].select("record_id", "cluster_id").collect()
+    )
+
+
+def _memberships(out) -> list:
+    return sorted(
+        (r["cluster_id"], tuple(m["record_id"] for m in r["records"]))
+        for r in out["clusters"].select("cluster_id", "records").collect()
+    )
+
+
+def test_threshold_rerun_matches_clean_run(run, corpus, spark, tmp_path):
+    """The rerun contract: a threshold-only rerun on a committed workdir
+    reads records, blocks, candidates and scores back, re-cuts only the
+    clusters, and ends with the same assignments and cluster membership
+    as a clean run at the new threshold on a fresh workdir."""
+    _, _, wd = run
+    pages, lab, _ = corpus
+    rerun = Pipeline(spark, PipelineConfig(workdir=wd, threshold=0.6))
+    out = rerun.run(pages, lab)
+    assert _resumed(rerun) == UPSTREAM
+    clean = Pipeline(spark, PipelineConfig(workdir=str(tmp_path), threshold=0.6))
+    ref = clean.run(pages, lab)
+    assert not _resumed(clean)
+    assert _assignments(out) == _assignments(ref)
+    assert _memberships(out) == _memberships(ref)
+
+
+def test_blocks_dropped_survive_resume(spark, tmp_path):
+    """The mega-block guard's stats are stored with the candidate_pairs
+    checkpoint: a run that resumes it reports the same blocks_dropped as
+    the run that committed it, and a checkpoint committed without them (a
+    crash before the metrics commit) gets them recomputed."""
+    pages_pd, truth = make_pages(n_base=60, seed=3)
+    pages = pages_df(spark, pages_pd)
+    lab = spark.createDataFrame(make_labeled_pairs(truth, n_pos=40, n_neg=80))
+    wd = str(tmp_path)
+    first = Pipeline(spark, PipelineConfig(workdir=wd, max_block=2))
+    first.run(pages, lab)
+    dropped = first.metrics["blocks_dropped"]
+    assert dropped["dropped_keys"] > 0, dropped
+
+    again = Pipeline(spark, PipelineConfig(workdir=wd, max_block=2, threshold=0.6))
+    again.run(pages, lab)
+    assert again.metrics["candidate_pairs"]["resumed"] is True
+    assert again.metrics["blocks_dropped"] == dropped
+    with open(os.path.join(wd, "pipeline.metrics.json")) as fh:
+        assert json.load(fh)["blocks_dropped"] == dropped
+
+    mpath = os.path.join(wd, "candidate_pairs", Pipeline.MANIFEST)
+    with open(mpath) as fh:
+        man = json.load(fh)
+    del man["metrics"]["blocks_dropped"]
+    with open(mpath, "w") as fh:
+        json.dump(man, fh)
+    third = Pipeline(spark, PipelineConfig(workdir=wd, max_block=2))
+    third.run(pages, lab)
+    assert third.metrics["candidate_pairs"]["resumed"] is True
+    assert third.metrics["blocks_dropped"] == dropped
+    with open(mpath) as fh:
+        assert json.load(fh)["metrics"]["blocks_dropped"] == dropped
+
+
+# A value different from the default for every key_dict field.
+FLIPPED = {
+    "threshold": 0.6,
+    "max_block": 7,
+    "salt_target": 9,
+    "id_col": "id",
+    "norm_suffix": "_n",
+    "fields": list(PAGE_FIELDS_DEDUPE),
+    "l2": 0.2,
+    "tfidf": "corpus",
+    "idf_top_k": 1024,
+    "refine": True,
+    "extract_html": "builtin",
+    "phonetic_blocking": True,
+    "adaptive_blocking": True,
+}
+
+
+def _stage_keys(**overrides) -> dict:
+    """Every stage's key for a config, parents held fixed. No Spark and no
+    workdir: ``_stage_key`` reads only the config. ``wide`` stands for a
+    stage not in STAGE_CONFIG."""
+    p = object.__new__(Pipeline)
+    p.cfg = PipelineConfig(workdir="unused", **overrides)
+    return {s: p._stage_key(s, []) for s in [*STAGE_CONFIG, "wide"]}
+
+
+def test_stage_config_covers_key_dict():
+    """Every config field that can change a result keys some stage."""
+    fields = set(PipelineConfig(workdir="unused").key_dict())
+    assert set().union(*STAGE_CONFIG.values()) == fields
+    assert set(FLIPPED) == fields
+
+
+@pytest.mark.parametrize("field", sorted(FLIPPED))
+def test_config_field_keys_exactly_its_stages(field):
+    base = _stage_keys()
+    flipped = _stage_keys(**{field: FLIPPED[field]})
+    changed = {s for s in base if base[s] != flipped[s]}
+    listed = {s for s, reads in STAGE_CONFIG.items() if field in reads}
+    assert changed == listed | {"wide"}
+
+
+@pytest.mark.parametrize(
+    "storage",
+    [
+        {"snapshot_retention": 0},
+        {"table_format": "iceberg"},
+        {"catalog_namespace": "other"},
+    ],
+)
+def test_storage_fields_change_no_key(storage):
+    assert _stage_keys(**storage) == _stage_keys()
 
 
 def test_dedupe_parity_comparators_f1(spark, corpus, tmp_path_factory):
@@ -241,7 +370,8 @@ def test_snapshot_history_time_travel_and_expiry(spark, corpus, tmp_path_factory
     assert [(e["snapshot_id"], e["current"]) for e in log1] == [(1, True)]
     assert log1[0]["rows"] is not None and log1[0]["committed_at"] is not None
 
-    # config change -> every stage recommits; the old snapshot is kept
+    # threshold change -> the clustering stages recommit; the old
+    # snapshot is kept
     pl2 = Pipeline(spark, PipelineConfig(workdir=wd, threshold=0.9))
     n2 = pl2.run(pages, lab)["clusters"].count()
     log2 = pl2.snapshots("clusters")
