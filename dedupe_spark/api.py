@@ -7,6 +7,16 @@ The reference drives DedupeIO 3.0.3 through five calls (call sites
 names with the same contract over Spark DataFrames, so a reference user
 can switch by replacing the pandas dict-of-dicts with a DataFrame.
 
+The labeling loop (M3) runs on the driver. The first ``uncertain_pairs``
+call after a ``prepare_training`` featurizes the whole candidate pool in
+one pandas-UDF Spark job (``operators.scoring.feature_pairs``) and keeps
+the ids and the feature matrix; the pool is at most
+C(``max_training_rows``, 2) pairs, under 8 MB of float64 at the default
+400 rows and four String fields. Every later round masks the labeled
+pairs, scores the matrix with the driver-side model and sorts — pure
+numpy, no Spark job — so a retrain re-ranks the pool without featurizing
+it again. Only ``partition`` scores distributed.
+
 ``dedupe_table`` is the one-call batch path for the reference's actual
 use case — an all-string tabular file (KNA-style customer master) with
 pre-labeled pairs — returning the clusters relation of SURVEY.md A1.
@@ -15,8 +25,10 @@ pre-labeled pairs — returning the clusters relation of SURVEY.md A1.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from .functions.features import FieldSpec, compute_features, feature_names
 from .lifecycle import track
@@ -25,11 +37,15 @@ from .normalize import normalize_features
 from .operators import blocking as B
 from .operators.assemble import assemble_clusters
 from .operators.clustering import connected_components, member_confidence
-from .operators.scoring import attach_pair_fields, score_pairs, try_build_lookup
+from .operators.scoring import (
+    attach_pair_fields,
+    feature_pairs,
+    score_pairs,
+    try_build_lookup,
+)
 from .training import (
     sample_training_pairs,
     select_predicates,
-    split_labels,
     uncertain_pairs as _uncertain_top,
 )
 
@@ -87,50 +103,34 @@ class Deduper:
         self.predicates: dict[str, Column] | None = None
         self._records: DataFrame | None = None
         self._cand_pairs: DataFrame | None = None
+        # the candidate pool on the driver: (id1, id2, key) rows and their
+        # feature matrix, collected on the first uncertain_pairs call
+        self._pool: tuple[pd.DataFrame, np.ndarray] | None = None
         self._match: list[tuple[str, str]] = []
         self._distinct: list[tuple[str, str]] = []
         self._pairs_served = 0
-        self._lookup = None
-        self._lookup_tried = False
 
     def close(self) -> None:
-        """Release session resources (cached record/candidate tables, the
-        broadcast lookup). Call when the dedup session is done; the object
-        is reusable after a fresh prepare_training."""
+        """Release session resources (the cached record and candidate
+        tables, the driver-side pool). Call when the dedup session is done;
+        a second call is a no-op, and the object is reusable after a fresh
+        prepare_training."""
         for df in (self._records, self._cand_pairs):
             if df is not None:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-        if self._lookup is not None:
-            try:
-                self._lookup.destroy()
-            except Exception:
-                pass
+                df.unpersist()
         self._records = None
         self._cand_pairs = None
-        self._lookup = None
-        self._lookup_tried = False
+        self._pool = None
 
     # -- M2: sampling ------------------------------------------------------
 
     def prepare_training(self, records: DataFrame) -> None:
         """Normalize fields and sample candidate training pairs from a
         bounded slice (reference prepare_training, dedupe_script.py:293)."""
-        if self._records is not None:
-            self._records.unpersist()
-        if self._cand_pairs is not None:
-            self._cand_pairs.unpersist()
-        if self._lookup is not None:
-            # drop the executor/driver copies before losing the reference —
-            # re-prepare loops would otherwise pile up dead broadcasts
-            self._lookup.destroy()
+        self.close()  # the old tables and pool are stale
         self._records = normalize_features(
             records, [f.name for f in self.fields], self.norm_suffix
         ).cache()
-        self._lookup = None  # stale against the new record table
-        self._lookup_tried = False
         pool = default_predicates(self.fields, self.norm_suffix)
         self._cand_pairs = sample_training_pairs(
             self._records,
@@ -146,31 +146,75 @@ class Deduper:
         """Most informative unlabeled pairs under the current model
         (|score - 0.5| ascending); before any training, a deterministic
         sample of the candidate pool. Returns empty once the
-        ``max_training_pairs`` budget is spent."""
+        ``max_training_pairs`` budget is spent.
+
+        The first call featurizes the pool in one Spark job; every later
+        call ranks the cached feature matrix on the driver and runs no
+        Spark job (module docstring)."""
         if self._cand_pairs is None:
             raise RuntimeError("call prepare_training first")
         k = min(k, self.max_training_pairs - self._pairs_served)
         if k <= 0:
             return self._cand_pairs.select("id1", "id2").limit(0)
-        labeled = {p for p in self._match} | {p for p in self._distinct}
-        cands = self._cand_pairs
-        if labeled:
-            spark = cands.sparkSession
-            lab_df = spark.createDataFrame(
-                list(labeled), "id1 string, id2 string"
-            )
-            cands = cands.join(lab_df, ["id1", "id2"], "left_anti")
+        if self._pool is None:
+            self._pool = self._featurize()
+        pool, X = self._pool
+        labeled = set(self._match) | set(self._distinct)
+        live = np.fromiter(
+            (p not in labeled for p in zip(pool["id1"], pool["id2"])),
+            dtype=bool,
+            count=len(pool),
+        )
+        id1 = pool["id1"].to_numpy()[live]
+        id2 = pool["id2"].to_numpy()[live]
+        schema = [self._cand_pairs.schema["id1"], self._cand_pairs.schema["id2"]]
         if self.model is None:
-            out = cands.orderBy(F.xxhash64("id1", "id2")).limit(k)
+            top = np.lexsort((id2, id1, pool["key"].to_numpy()[live]))[:k]
+            picked = pd.DataFrame({"id1": id1[top], "id2": id2[top]})
         else:
-            out = _uncertain_top(self._score(cands), k)
-        # bring the ≤k selected rows to the driver once and hand them back
-        # as a local relation (an Arrow-built frame from pandas): the budget
-        # count and the caller's collect then run no Spark job, and the
-        # session leaves nothing behind in executor storage
-        picked = out.toPandas()
+            score = self.model.predict_proba(X[live])
+            top = _uncertain_top(id1, id2, score, k)
+            picked = pd.DataFrame(
+                {"id1": id1[top], "id2": id2[top], "score": score[top]}
+            )
+            schema.append(StructField("score", DoubleType()))
+        # an Arrow-built local relation: the budget count and the caller's
+        # collect run no Spark job, and nothing lands in executor storage
         self._pairs_served += len(picked)
-        return cands.sparkSession.createDataFrame(picked, out.schema)
+        return self._cand_pairs.sparkSession.createDataFrame(
+            picked, StructType(schema)
+        )
+
+    def _featurize(self) -> tuple[pd.DataFrame, np.ndarray]:
+        """The candidate pool on the driver: its (id1, id2, xxhash64 key)
+        rows and their ``compute_features`` matrix, from one pandas-UDF
+        Spark job (module docstring). The broadcast lookup the job gathers
+        through is dropped as soon as the rows are collected."""
+        lookup = try_build_lookup(
+            self._records, self.id_col, self.fields, self.norm_suffix
+        )
+        try:
+            pdf = (
+                feature_pairs(
+                    self._cand_pairs,
+                    self._records,
+                    self.fields,
+                    self.id_col,
+                    self.norm_suffix,
+                    lookup=lookup,
+                )
+                .select(
+                    "id1", "id2", F.xxhash64("id1", "id2").alias("key"), "features"
+                )
+                .toPandas()
+            )
+        finally:
+            if lookup is not None:
+                lookup.destroy()
+        feats = pdf.pop("features")
+        if len(feats):
+            return pdf, np.stack(feats.to_list())
+        return pdf, np.empty((0, len(feature_names(self.fields))))
 
     # -- M4: label ingestion ----------------------------------------------
 
@@ -200,9 +244,10 @@ class Deduper:
                 "(reference UI gates at >=2 of each, page.tsx:368-369)"
             )
         spark = self._records.sparkSession
-        rows = [(a, b, "y") for a, b in self._match] + [
-            (a, b, "n") for a, b in self._distinct
-        ]
+        # pandas-built (an Arrow local relation): a Python list would pickle
+        # its rows through a Python RDD task and start a second worker pool
+        rows = pd.DataFrame(self._match + self._distinct, columns=["id1", "id2"])
+        rows["label"] = ["y"] * len(self._match) + ["n"] * len(self._distinct)
         lab = spark.createDataFrame(rows, "id1 string, id2 string, label string")
         field_cols = [f.name + self.norm_suffix for f in self.fields]
         wide = attach_pair_fields(
@@ -260,28 +305,6 @@ class Deduper:
         assign = member_confidence(connected_components(edges), edges)
         cols = record_cols or [f.name for f in self.fields]
         return assemble_clusters(assign, recs, self.id_col, cols)
-
-    def _score(self, pairs: DataFrame) -> DataFrame:
-        # the record table is fixed after prepare_training: build the
-        # broadcast lookup once and reuse it across every scoring call
-        # (uncertain_pairs loops would otherwise re-collect the table and
-        # pile up never-destroyed broadcasts each iteration). A corpus over
-        # the caps — or one with non-unique ids — gets None and scores
-        # through the pair join; the table is fixed, so that answer stays.
-        if not self._lookup_tried:
-            self._lookup = try_build_lookup(
-                self._records, self.id_col, self.fields, self.norm_suffix
-            )
-            self._lookup_tried = True
-        return score_pairs(
-            pairs,
-            self._records,
-            self.model,
-            self.fields,
-            self.id_col,
-            self.norm_suffix,
-            lookup=self._lookup,
-        )
 
 
 def dedupe_table(

@@ -17,6 +17,7 @@ min-id, so labels are deterministic and stable across runs/partitionings.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -92,8 +93,12 @@ def _driver_union_find(edge_rows: list, spark) -> DataFrame:
             if rv < ru:
                 ru, rv = rv, ru
             parent[rv] = ru
-    rows = [(node, find(node)) for node in parent]
-    return spark.createDataFrame(rows, "record_id string, cluster_id string")
+    labels = pd.DataFrame(
+        [(node, find(node)) for node in parent], columns=["record_id", "cluster_id"]
+    )
+    # pandas-built (Arrow): a Python list would pickle its rows through a
+    # Python RDD task and start a second pool of Python workers
+    return spark.createDataFrame(labels, "record_id string, cluster_id string")
 
 
 def connected_components(

@@ -6,6 +6,10 @@ regularized logistic regression, fanned out with multiprocessing (call site
 Arrow-batched pandas UDF computes the whole field-distance vector AND the
 sigmoid in one pass. The LR model is <1 KB: it travels to executors in the
 UDF closure (an explicit broadcast of a weight struct would buy nothing).
+Without the sigmoid, the same kernels give :func:`feature_pairs`: the
+feature rows themselves, which the labeling loop collects once and ranks
+on the driver (api.py). Each path calls ``compute_features`` from one
+place, so scores and feature rows cannot drift apart.
 
 One contract for every pair kernel in the engine (scoring here, the n-gram
 and bag-Jaccard verifies in operators/dedup.py): the ``lookup`` argument
@@ -45,7 +49,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import ArrayType, DoubleType
 
 from ..functions.features import (  # noqa: F401  (re-exported public API)
     FieldSpec,
@@ -248,8 +252,31 @@ def _linear(model: LogisticModel, fields: list[FieldSpec]):
     return model.weights.copy(), float(model.intercept)
 
 
+def _join_features(cols: tuple, fields: list[FieldSpec]) -> np.ndarray:
+    """The join path's feature matrix: columns interleaved left/right per
+    field, in ``fields`` order."""
+    left = {f.name: cols[2 * i] for i, f in enumerate(fields)}
+    right = {f.name: cols[2 * i + 1] for i, f in enumerate(fields)}
+    return compute_features(left, right, fields)
+
+
+def make_feature_udf(fields: list[FieldSpec]):
+    """pandas UDF (l_f1, r_f1, l_f2, r_f2, ...) -> array<double>, the
+    ``compute_features`` row of each pair (join path of
+    :func:`feature_pairs`)."""
+    fields = list(fields)
+
+    @pandas_udf(ArrayType(DoubleType()))
+    def _features(*cols: pd.Series) -> pd.Series:
+        return pd.Series(list(_join_features(cols, fields)))
+
+    # see gather_pairs: prevent duplicate evaluation via pushdown
+    return _features.asNondeterministic()
+
+
 def make_score_udf(model: LogisticModel, fields: list[FieldSpec]):
-    """pandas UDF (l_f1, r_f1, l_f2, r_f2, ...) -> double match probability.
+    """pandas UDF (l_f1, r_f1, l_f2, r_f2, ...) -> double match probability:
+    the sigmoid over :func:`make_feature_udf`'s row.
 
     Column order: interleaved left/right per field, in ``fields`` order. The
     model's feature_names must equal feature_names(fields).
@@ -259,27 +286,84 @@ def make_score_udf(model: LogisticModel, fields: list[FieldSpec]):
 
     @pandas_udf(DoubleType())
     def _score(*cols: pd.Series) -> pd.Series:
-        left = {f.name: cols[2 * i] for i, f in enumerate(fields)}
-        right = {f.name: cols[2 * i + 1] for i, f in enumerate(fields)}
-        X = compute_features(left, right, fields)
-        return pd.Series(sigmoid(X @ w + b))
+        return pd.Series(sigmoid(_join_features(cols, fields) @ w + b))
 
     # see gather_pairs: prevent duplicate evaluation via pushdown
     return _score.asNondeterministic()
 
 
-def _score_kernel(model: LogisticModel, fields: list[FieldSpec]):
-    """:func:`gather_pairs` kernel: match probability of each gathered pair."""
-    w, b = _linear(model, fields)
+def _feature_kernel(fields: list[FieldSpec]):
+    """:func:`gather_pairs` kernel core: the (n, d) ``compute_features``
+    matrix of the gathered pairs."""
     fields = list(fields)
 
     def kernel(lk: dict, p1: np.ndarray, p2: np.ndarray) -> np.ndarray:
         cols = lk["cols"]
         left = {f.name: pd.Series(cols[f.name][p1]) for f in fields}
         right = {f.name: pd.Series(cols[f.name][p2]) for f in fields}
-        return sigmoid(compute_features(left, right, fields) @ w + b)
+        return compute_features(left, right, fields)
 
     return kernel
+
+
+def _score_kernel(model: LogisticModel, fields: list[FieldSpec]):
+    """:func:`gather_pairs` kernel: match probability of each gathered pair,
+    the sigmoid over :func:`_feature_kernel`."""
+    w, b = _linear(model, fields)
+    features = _feature_kernel(fields)
+
+    def kernel(lk: dict, p1: np.ndarray, p2: np.ndarray) -> np.ndarray:
+        return sigmoid(features(lk, p1, p2) @ w + b)
+
+    return kernel
+
+
+def feature_pairs(
+    pairs: DataFrame,
+    records: DataFrame,
+    fields: list[FieldSpec],
+    id_col: str,
+    norm_suffix: str = "_norm",
+    lookup: RecordLookup | None = None,
+) -> DataFrame:
+    """(id1, id2, features): the ``compute_features`` row of every pair as
+    array<double>, in feature_names(fields) order. ``lookup`` picks the
+    path exactly as in :func:`score_pairs`; the rows are the ones
+    score_pairs would score."""
+    if lookup is not None:
+        features = _feature_kernel(fields)
+        return gather_pairs(
+            pairs,
+            lookup,
+            lambda lk, p1, p2: list(features(lk, p1, p2)),
+            ArrayType(DoubleType()),
+            "features",
+        )
+    return _join_pairs(
+        pairs, records, fields, id_col, norm_suffix, True, make_feature_udf(fields),
+        "features",
+    )
+
+
+def _join_pairs(
+    pairs: DataFrame,
+    records: DataFrame,
+    fields: list[FieldSpec],
+    id_col: str,
+    norm_suffix: str,
+    repartition: bool,
+    udf,
+    name: str,
+) -> DataFrame:
+    """(id1, id2, ``name``): a join-path pair UDF over the field values
+    shipped through the pair join, interleaved left/right per field."""
+    field_cols = [f.name + norm_suffix for f in fields]
+    wide = attach_pair_fields(pairs, records, id_col, field_cols)
+    if repartition:
+        par = pairs.sparkSession.sparkContext.defaultParallelism
+        wide = wide.repartition(par * 3)
+    in_cols = [F.col(f"{side}_{c}") for c in field_cols for side in ("l", "r")]
+    return wide.select("id1", "id2", udf(*in_cols).alias(name))
 
 
 def score_pairs(
@@ -319,16 +403,10 @@ def score_pairs(
             repartition_pairs,
         )
     else:
-        field_cols = [f.name + norm_suffix for f in fields]
-        wide = attach_pair_fields(pairs, records, id_col, field_cols)
-        if repartition_pairs:
-            par = pairs.sparkSession.sparkContext.defaultParallelism
-            wide = wide.repartition(par * 3)
-        udf = make_score_udf(model, fields)
-        in_cols = []
-        for c in field_cols:
-            in_cols += [F.col(f"l_{c}"), F.col(f"r_{c}")]
-        scored = wide.select("id1", "id2", udf(*in_cols).alias("score"))
+        scored = _join_pairs(
+            pairs, records, fields, id_col, norm_suffix, repartition_pairs,
+            make_score_udf(model, fields), "score",
+        )
     if threshold is not None:
         scored = scored.where(F.col("score") >= F.lit(float(threshold)))
     return scored

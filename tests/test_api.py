@@ -213,6 +213,93 @@ def test_uncertain_pairs_served_sequence(spark, kna):
     assert jobs == [0] * 5
 
 
+def _jobs_of(spark, group, fn):
+    """fn()'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _serve(d, k):
+    return [(r["id1"], r["id2"]) for r in d.uncertain_pairs(k=k).collect()]
+
+
+def test_warm_rounds_run_no_spark_jobs(spark, kna):
+    """After the first scored round featurizes the pool, a round (the call
+    and its collect) runs no Spark job; a retrain between rounds re-ranks
+    the cached feature matrix without featurizing again."""
+    df, truth = kna
+    d = Deduper(
+        [FieldSpec("Name 1"), FieldSpec("City"), FieldSpec("Street")],
+        id_col="record_id",
+        seed=3,
+    )
+    d.prepare_training(df)
+    pos = sorted(_true_pairs(truth))
+    d.mark_pairs(match=pos[:3], distinct=[(pos[0][0], pos[1][0])])
+    d.train()
+    _mark_by_truth(d, truth, _serve(d, 2))
+    pool = d._pool
+    for i in range(3):
+        pairs, jobs = _jobs_of(spark, f"warm-{i}", lambda: _serve(d, 2))
+        assert len(pairs) == 2 and jobs == 0, (i, pairs, jobs)
+        _mark_by_truth(d, truth, pairs)
+    before = _jobs_of(spark, "before-retrain", lambda: _serve(d, 4))
+    d.train()
+    after = _jobs_of(spark, "after-retrain", lambda: _serve(d, 4))
+    assert d._pool is pool
+    d.close()
+    assert before[1] == after[1] == 0
+    assert before[0] != after[0]
+
+
+def test_prepare_training_drops_pool(spark, kna):
+    """A second prepare_training drops the driver-side pool; the next round
+    featurizes the new record table and serves only its pairs."""
+    df, _ = kna
+    d = Deduper([FieldSpec("Name 1"), FieldSpec("City")], id_col="record_id")
+    d.prepare_training(df)
+    assert all(a.isdigit() and b.isdigit() for a, b in _serve(d, 3))
+    renamed = df.withColumn("record_id", F.concat(F.lit("x"), "Customer"))
+    d.prepare_training(renamed)
+    assert d._pool is None
+    got = _serve(d, 3)
+    d.close()
+    assert len(got) == 3
+    assert all(a.startswith("x") and b.startswith("x") for a, b in got), got
+
+
+def test_join_path_serves_same_pairs(spark, kna, monkeypatch):
+    """The pair-join featurize path serves the same pairs as the broadcast
+    lookup path over a seeded 5-round session, retrains included."""
+    from dedupe_spark.operators import scoring
+
+    df, truth = kna
+    fields = [FieldSpec("Name 1"), FieldSpec("City"), FieldSpec("Street")]
+
+    def session():
+        d = Deduper(fields, id_col="record_id", seed=3)
+        d.prepare_training(df)
+        d.mark_pairs(match=sorted(_true_pairs(truth))[:3])
+        served = []
+        for i in range(5):
+            if i >= 2:
+                d.train()
+            served.append(_serve(d, 2))
+            _mark_by_truth(d, truth, served[-1])
+        d.close()
+        return served
+
+    lookup = session()
+    monkeypatch.setattr(scoring, "BROADCAST_ROWS", 0)
+    assert scoring.try_build_lookup(df, "record_id", fields) is None
+    assert session() == lookup
+
+
 @pandas_udf(StringType())
 def _worker_stat(x: pd.Series) -> pd.Series:
     """'<pid> <VmRSS kB>' of the Python worker that runs the batch."""

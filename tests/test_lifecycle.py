@@ -40,9 +40,29 @@ def test_release_at_entry_frees_previous_query(spark):
     lifecycle.release_session_storage(spark)
 
 
-def test_deduper_close_destroys_lookup(spark):
+def test_deduper_close_destroys_lookup(spark, monkeypatch):
+    """Every broadcast lookup the Deduper builds is destroyed, re-prepare
+    releases the old tables and pool, and close() releases the cached
+    tables and the driver-side pool; a second close() is a no-op."""
+    from pyspark import StorageLevel
+
     from dedupe_spark.api import Deduper
     from dedupe_spark.functions.features import FieldSpec
+    from dedupe_spark.operators.scoring import RecordLookup
+
+    built, destroyed = [], []
+    real_build, real_destroy = RecordLookup.build, RecordLookup.destroy
+
+    def build(*a, **kw):
+        built.append(real_build(*a, **kw))
+        return built[-1]
+
+    def destroy(self):
+        destroyed.append(self)
+        real_destroy(self)
+
+    monkeypatch.setattr(RecordLookup, "build", staticmethod(build))
+    monkeypatch.setattr(RecordLookup, "destroy", destroy)
 
     df = spark.createDataFrame(
         [("1", "alice smith"), ("2", "alice smyth"), ("3", "bob jones")],
@@ -51,10 +71,19 @@ def test_deduper_close_destroys_lookup(spark):
     d = Deduper([FieldSpec("name")], max_training_pairs=4)
     d.prepare_training(df)
     d.uncertain_pairs(k=1)
-    # re-prepare must not leak the old cached tables/lookup
+    old = (d._records, d._cand_pairs)
+    # re-prepare must not leak the old cached tables, pool or lookup
     d.prepare_training(df)
+    assert d._pool is None
+    d.uncertain_pairs(k=1)
+    assert d._pool is not None
+    cached = (d._records, d._cand_pairs)
     d.close()
-    assert d._lookup is None and d._records is None
+    d.close()
+    assert d._records is None and d._cand_pairs is None and d._pool is None
+    for frame in old + cached:
+        assert frame.storageLevel == StorageLevel.NONE
+    assert len(built) == 2 and [id(x) for x in destroyed] == [id(x) for x in built]
     lifecycle.release_session_storage(spark)
 
 

@@ -101,8 +101,8 @@ def test_union_find_labels_are_component_minima(edge_ints):
     want = {x: min(c) for x, c in comp.items()}
 
     class FakeSpark:
-        def createDataFrame(self, rows, schema):
-            return rows
+        def createDataFrame(self, labels, schema):
+            return labels.itertuples(index=False, name=None)
 
     got = dict(_driver_union_find(edges, FakeSpark()))
     assert got == want

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -83,13 +84,35 @@ def test_blocking_recall(corpus):
     assert rec >= 0.95
 
 
-def test_uncertain_pairs_ordering(spark):
-    scored = spark.createDataFrame(
-        [("a", "b", 0.51), ("c", "d", 0.9), ("e", "f", 0.45), ("g", "h", 0.1)],
-        "id1 string, id2 string, score double",
-    )
-    got = [(r["id1"], r["id2"]) for r in TR.uncertain_pairs(scored, k=2).collect()]
-    assert got == [("a", "b"), ("e", "f")]
+def _ranked(rows, k):
+    id1 = np.array([r[0] for r in rows], dtype=object)
+    id2 = np.array([r[1] for r in rows], dtype=object)
+    score = np.array([r[2] for r in rows])
+    return [(id1[i], id2[i]) for i in TR.uncertain_pairs(id1, id2, score, k=k)]
+
+
+def test_uncertain_pairs_ordering():
+    rows = [("a", "b", 0.51), ("c", "d", 0.9), ("e", "f", 0.45), ("g", "h", 0.1)]
+    assert _ranked(rows, k=2) == [("a", "b"), ("e", "f")]
+
+
+def test_uncertain_pairs_exact_tie_breaks_by_ids():
+    """0.25 and 0.75 sit exactly 0.25 from the boundary: the tie goes to
+    the smaller id1, then the smaller id2."""
+    rows = [
+        ("b", "c", 0.75),
+        ("a", "z", 0.25),
+        ("b", "a", 0.25),
+        ("a", "m", 0.75),
+        ("c", "d", 0.6),
+    ]
+    assert _ranked(rows, k=5) == [
+        ("c", "d"),
+        ("a", "m"),
+        ("a", "z"),
+        ("b", "a"),
+        ("b", "c"),
+    ]
 
 
 def test_hash_split_deterministic_and_complete(spark):
