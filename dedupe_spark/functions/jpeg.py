@@ -89,6 +89,8 @@ class _BitReader:
         b = self.b
         while self.n <= 24:
             if self.pos >= len(b):
+                if self.n:  # the last bytes of a file without EOI
+                    return
                 raise CodecError("truncated JPEG entropy data")
             byte = b[self.pos]
             if byte == 0xFF:
@@ -386,6 +388,8 @@ def _decode_jpeg_inner(b: bytes) -> np.ndarray:
     try:
         while True:
             if pos + 2 > len(b):
+                if saw_scan:  # missing EOI after scan data: end of buffer is EOI
+                    break
                 raise CodecError("truncated JPEG")
             if b[pos] != 0xFF:
                 raise CodecError("JPEG marker desync")

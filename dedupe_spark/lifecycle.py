@@ -30,6 +30,7 @@ from __future__ import annotations
 import threading
 from typing import Any
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 _LOCK = threading.Lock()
@@ -52,9 +53,9 @@ def tracked_count() -> int:
 
 
 def release_tracked() -> int:
-    """Unpersist/destroy every tracked object. Never raises (a released
-    SparkContext or an already-destroyed broadcast is not an error at
-    cleanup time)."""
+    """Unpersist/destroy every tracked object. A py4j error (a released
+    SparkContext, an already-destroyed broadcast) is not an error at
+    cleanup time and is skipped; any other error propagates."""
     n = 0
     while _TRACKED:
         obj = _TRACKED.pop()
@@ -64,7 +65,7 @@ def release_tracked() -> int:
             else:  # Broadcast or RecordLookup — both expose destroy()
                 obj.destroy()
             n += 1
-        except Exception:
+        except Py4JError:
             pass
     return n
 
@@ -88,9 +89,9 @@ def release_session_storage(spark: SparkSession) -> dict:
             try:
                 jrdd.unpersist()
                 n_rdd += 1
-            except Exception:
+            except Py4JError:
                 pass
         spark.catalog.clearCache()
-    except Exception:
+    except Py4JError:
         pass
     return {"tracked_released": released, "rdds_unpersisted": n_rdd}

@@ -16,12 +16,8 @@ the previous snapshot moves under ``<workdir>/_snapshots/<stage>/<id>``
 and stays time-travel readable (``Pipeline.read_snapshot``/``snapshots``)
 until ``expire_snapshots`` reclaims it — the Iceberg snapshot-log
 semantics that let a 100 TB pipeline diff the effect of a config change
-without recomputing either side. On a cluster the format would be Iceberg
-proper: set ``PipelineConfig.table_format = "iceberg"`` (or ``"delta"``)
-and every stage commit goes through the real catalog binding in
-``catalog.TableCatalog`` instead (this sandbox carries no lakehouse jars,
-so the flag-off manifest-then-rename protocol keeps the same commit
-semantics on a plain filesystem and is the tested default).
+without recomputing either side. This manifest-then-rename protocol is the
+pipeline's only checkpoint binding.
 
 The reference's equivalent lifecycle is the monolithic
 ``find_duplicates_in_files`` control flow
@@ -193,7 +189,13 @@ def train_model(
         F.col("url1").alias("id1"), F.col("url2").alias("id2"), "label"
     )
     field_cols = [f.name + norm_suffix for f in fields]
-    wide = SC.attach_pair_fields(lab, records, id_col, field_cols).toPandas()
+    # fit in a fixed row order: the fit sums in row order and the model's
+    # hash keys scored_pairs, so Spark's row order must not change the key
+    wide = (
+        SC.attach_pair_fields(lab, records, id_col, field_cols)
+        .toPandas()
+        .sort_values(["id1", "id2", "label"], ignore_index=True)
+    )
     left = {f.name: wide[f"l_{f.name}{norm_suffix}"] for f in fields}
     right = {f.name: wide[f"r_{f.name}{norm_suffix}"] for f in fields}
     X = compute_features(left, right, fields)
@@ -257,16 +259,6 @@ class PipelineConfig:
     # max_block — the answer to fixed-key cap collapse under corpus
     # growth (BENCH.md 10× stress). Keys blocks.
     adaptive_blocking: bool = False
-    # "parquet" (default): the filesystem manifest-then-rename snapshot
-    # protocol below. "iceberg" | "delta": commit every stage checkpoint
-    # to a REAL lakehouse catalog table instead (catalog.TableCatalog) —
-    # atomicity/snapshots/time-travel become the engine's own, the resume
-    # key rides in table properties. Requires the catalog wired into the
-    # SparkSession (fails fast at Pipeline construction with the
-    # spark-submit flags otherwise). NOT part of key_dict — a storage
-    # binding, never a computation change.
-    table_format: str = "parquet"
-    catalog_namespace: str = "dedupe"
 
     def key_dict(self) -> dict:
         return {
@@ -318,15 +310,6 @@ class Pipeline:
         self.cfg = config
         os.makedirs(config.workdir, exist_ok=True)
         self.metrics: dict[str, dict] = {}
-        self.catalog = None
-        if config.table_format != "parquet":
-            from .catalog import TableCatalog
-
-            # fails fast (CatalogUnavailableError + spark-submit hint) if
-            # the session carries no such binding — never at first commit
-            self.catalog = TableCatalog(
-                spark, config.table_format, config.catalog_namespace
-            )
 
     # -- checkpoint machinery ------------------------------------------------
 
@@ -404,15 +387,7 @@ class Pipeline:
         snapshots still on disk plus the live committed one (marked
         ``current``). Each entry carries the manifest's key, committed_at
         and row count — enough to diff a config change's effect without
-        recomputing anything. In catalog mode (table_format iceberg/
-        delta) this is the engine's own snapshot log, same ordering."""
-        if self.catalog is not None:
-            snaps = self.catalog.snapshots(name)
-            for e in snaps:
-                e["current"] = False
-            if snaps:
-                snaps[-1]["current"] = True
-            return snaps
+        recomputing anything."""
         out = []
         for sid in self._superseded_ids(name):
             man = self._read_manifest(os.path.join(self._snap_dir(name), str(sid)))
@@ -436,16 +411,7 @@ class Pipeline:
     def read_snapshot(self, name: str, snapshot_id: int | None = None) -> DataFrame:
         """Time-travel read: the stage's table as of ``snapshot_id``
         (default: the live committed snapshot). Raises ``LookupError`` if
-        the snapshot was never committed or has been expired. Catalog
-        mode delegates to the engine's time travel."""
-        if self.catalog is not None:
-            if snapshot_id is None:
-                if self.catalog.stage_key(name) is None:
-                    raise LookupError(
-                        f"stage {name!r} has no committed snapshot"
-                    )
-                return self.catalog.read_stage(name)
-            return self.catalog.read_snapshot(name, snapshot_id)
+        the snapshot was never committed or has been expired."""
         if snapshot_id is None:
             path = os.path.join(self.cfg.workdir, name)
             if self._read_manifest(path) is None:
@@ -465,14 +431,8 @@ class Pipeline:
     def expire_snapshots(self, name: str, keep_last: int | None = None) -> list[int]:
         """Drop the oldest superseded snapshots beyond ``keep_last``
         (default: the config's snapshot_retention). The live committed
-        snapshot is never expired. Returns the expired ids (filesystem
-        mode) or [] after delegating to the engine's count-based expiry
-        (catalog mode — Iceberg retain_last; Delta raises, its retention
-        is time-based only)."""
+        snapshot is never expired. Returns the expired ids."""
         keep = self.cfg.snapshot_retention if keep_last is None else keep_last
-        if self.catalog is not None:
-            self.catalog.expire_keep_last(name, keep)
-            return []
         ids = self._superseded_ids(name)
         victims = ids[: max(len(ids) - keep, 0)]
         for sid in victims:
@@ -497,13 +457,6 @@ class Pipeline:
         a recompute commit. Returns {files_before, files_after,
         bytes_total, snapshot_id}.
         """
-        if self.catalog is not None:
-            raise NotImplementedError(
-                "compact_stage is the filesystem protocol's maintenance "
-                "pass; in catalog mode use the engine's own — Iceberg "
-                "rewrite_data_files / Delta OPTIMIZE — on "
-                f"{self.catalog.identifier(name)!r}"
-            )
         path = os.path.join(self.cfg.workdir, name)
         man = self._read_manifest(path)
         if man is None:
@@ -583,13 +536,9 @@ class Pipeline:
     def _add_stage_metrics(self, name: str, extra: dict) -> None:
         """Store ``extra`` in stage ``name``'s committed metrics, so a
         resume of that checkpoint restores it. A metadata-only commit
-        after the data commit (an atomic manifest replace, or the
-        catalog's property commit): a crash between the two leaves a
-        resumable checkpoint without ``extra``."""
+        after the data commit (an atomic manifest replace): a crash
+        between the two leaves a resumable checkpoint without ``extra``."""
         self.metrics[name] = self.metrics[name] | extra
-        if self.catalog is not None:
-            self.catalog.set_metrics(name, self.metrics[name])
-            return
         path = os.path.join(self.cfg.workdir, name)
         man = self._read_manifest(path)
         man["metrics"] = man["metrics"] | extra
@@ -602,47 +551,6 @@ class Pipeline:
         self._fsync_path(path)
         with open(path + ".metrics.json", "w") as fh:
             json.dump(man["metrics"], fh)
-
-    def _stage_catalog(self, name: str, key: str, compute) -> tuple[DataFrame, str]:
-        """Catalog-backed variant of :meth:`stage` (table_format iceberg/
-        delta): the lakehouse table replace IS the atomic commit (the
-        engine's own snapshot protocol supersedes the filesystem
-        manifest-then-rename), resume = stored ``dedupe.stage_key`` table
-        property matching this run's key, and the same read-back
-        per-partition lineage lands in a metadata-only property commit.
-        Snapshot history / time travel / retention go through
-        catalog.TableCatalog.snapshots/read_snapshot/expire_snapshots."""
-        from pyspark.sql import functions as _F
-
-        if self.catalog.stage_key(name) == key:
-            df = self.catalog.read_stage(name)
-            m = self.catalog.read_metrics(name) or {"stage": name, "key": key}
-            self.metrics[name] = m | {"resumed": True}
-            return df, key
-        t0 = time.time()
-        df = compute()
-        self.catalog.write_stage(
-            df, name, key, {"stage": name, "key": key, "resumed": False}
-        )
-        out = self.catalog.read_stage(name)
-        prows = {
-            str(r["pid"]): int(r["n"])
-            for r in out.groupBy(_F.spark_partition_id().alias("pid"))
-            .agg(_F.count("*").alias("n"))
-            .collect()
-        }
-        m = {
-            "stage": name,
-            "key": key,
-            "rows": sum(prows.values()),
-            "partitions": out.rdd.getNumPartitions(),
-            "partition_rows": prows,
-            "seconds": round(time.time() - t0, 3),
-            "resumed": False,
-        }
-        self.catalog.set_metrics(name, m)
-        self.metrics[name] = m
-        return out, key
 
     def stage(self, name: str, parents: list[str], compute) -> tuple[DataFrame, str]:
         """Read checkpoint if its committed manifest matches, else compute
@@ -658,8 +566,6 @@ class Pipeline:
         <workdir>/<name>.metrics.json for observability.
         """
         key = self._stage_key(name, parents)
-        if self.catalog is not None:
-            return self._stage_catalog(name, key, compute)
         path = os.path.join(self.cfg.workdir, name)
         mfile = path + ".metrics.json"
         # sweep leftovers from crashed commits (best-effort, never load-

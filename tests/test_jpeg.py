@@ -753,3 +753,16 @@ def test_progressive_refine_zrl_with_trailing_history_coef():
             )
             assert np.array_equal(base, prog)
     assert found >= 1, "no candidate image exhibited the regression pattern"
+
+
+def test_missing_eoi_after_scan_data_decodes():
+    """A file cut just before its trailing FFD9 decodes as if the end of
+    the buffer were the EOI marker."""
+    px = _test_image(19, 21)
+    for full in (
+        encode_jpeg(px, subsample=True),
+        encode_jpeg(px, restart=2),
+        encode_jpeg_progressive(px),
+    ):
+        assert full.endswith(b"\xff\xd9")
+        assert np.array_equal(decode_jpeg(full[:-2]), decode_jpeg(full))

